@@ -343,50 +343,72 @@ def connected_components(
     """Connected components over a near-dup pair graph → dedup clusters
     (id, component) with component = min id reachable.
 
-    Iterative min-label propagation: each round joins labels across edges
-    and keeps the per-node min; stops when no label changed. Rounds are
-    O(diameter) — near-dup graphs are clusters of near-identical docs, so
-    diameter is tiny. Each round is one shuffle on node id;
-    ``localCheckpoint`` truncates the lineage so round N's plan does not
-    re-execute rounds 1..N-1 (the classic iterative-Spark trap).
+    Iterative min-label propagation: each round takes every node's min
+    label over its closed neighbourhood; stops when no label changed.
+    Rounds are O(diameter) — near-dup graphs are clusters of
+    near-identical docs, so diameter is tiny — and on such small graphs
+    each Spark job costs more than the data it moves, so the loop is
+    built to run as few jobs as possible:
+
+    1. The edge list — both directions plus a self-loop per node,
+       distinct — comes from one scan of ``pairs`` and is materialized
+       (``localCheckpoint``) before the loop, so the caller's pair plan
+       (an LSH band self-join, say) runs once, not once per round.
+    2. Labels are seeded with ``least(id, min(neighbour id))`` (the min
+       over the closed neighbourhood) — one aggregate over those edges,
+       and the first propagation round for free.
+    3. A round is one join + one aggregate: the self-loop carries the
+       node's previous label into the aggregate, so the round's
+       checkpointed output holds a ``changed`` flag (new < previous)
+       and convergence is a narrow ``filter(changed).limit(1).count()``
+       over the materialized round — no join of new labels against old.
+       ``localCheckpoint`` also truncates the lineage so round N's plan
+       does not re-execute rounds 1..N-1 (the classic iterative-Spark
+       trap).
+
+    Raises ``RuntimeError`` if the ``max_iter``-th round still changed a
+    label: partial labels would silently keep duplicates. A graph with a
+    long chain needs a higher ``max_iter`` or ``connected_components_star``
+    (O(log n) rounds).
     """
+    a, b = F.col(src_col), F.col(dst_col)
+    closed = F.array(*(
+        F.struct(s.alias("src"), d.alias("dst"))
+        for s, d in ((a, b), (b, a), (a, a), (b, b))
+    ))
     edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+        pairs.select(F.explode(closed).alias("e"))
+        .select("e.src", "e.dst")
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
+    labels = edges.groupBy(F.col("src").alias("id")).agg(
+        F.min("dst").alias("component")
     )
     for _ in range(max_iter):
-        # neighbor's current label, per node
-        nbr = (
-            edges.join(labels.withColumnRenamed("id", "dst2"),
-                       F.col("dst") == F.col("dst2"))
+        labels = (
+            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
+            .agg(
+                F.min("component").alias("component"),
+                F.min(
+                    F.when(F.col("src") == F.col("dst"), F.col("component"))
+                ).alias("prev"),
+            )
             .select(
                 "id",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias("component"),
+                "component",
+                (F.col("component") < F.col("prev")).alias("changed"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+        if labels.filter("changed").limit(1).count() == 0:
+            return labels.select("id", "component")
+        labels = labels.select("id", "component")
+    raise RuntimeError(
+        f"connected_components did not converge within max_iter={max_iter} "
+        "rounds; raise max_iter or use connected_components_star"
+    )
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:

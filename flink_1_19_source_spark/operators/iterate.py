@@ -14,14 +14,21 @@ wrong:
    exponentially).
 2. **Cheap convergence tests.** The per-round convergence check is an
    aggregate on the (already materialized) round result — never a
-   collect of the data itself.
+   collect of the data itself, and never a join of the new round
+   against the old one. ``connected_components`` (operators/dedup.py)
+   writes a ``changed`` flag into each round's checkpoint and tests it
+   with ``filter(changed).limit(1).count()``; ``bfs_distances`` below
+   compares one node count per round with the count it kept from the
+   round before.
+3. **Loop-invariant inputs materialized once.** Anything every round
+   reads (the edge list) is checkpointed before the loop; left lazy,
+   its upstream plan re-executes every round.
 
 The loop composes with everything else in the engine: the body is any
 DataFrame → DataFrame function, so steps keep Catalyst optimization,
-AQE, and broadcast decisions. ``connected_components``
-(operators/dedup.py) is this same pattern specialized to min-label
-propagation; ``bfs_distances`` below is the other canonical feedback
-loop, frontier BFS.
+AQE, and broadcast decisions. ``connected_components`` is this same
+pattern specialized to min-label propagation; ``bfs_distances`` below
+is the other canonical feedback loop, frontier BFS.
 
 Scale shape: per round, exactly the shuffles the body declares (one
 key shuffle for BFS); state between rounds lives in the cluster as a
@@ -102,9 +109,18 @@ def bfs_distances(
             .agg(F.min("dist").alias("dist"))
         )
 
+    # the previous round's node count, kept so each round runs one count
+    n_prev: int | None = None
+
     def settled(prev: DataFrame, new: DataFrame) -> bool:
         # BFS distances never improve after first discovery, so an
         # unchanged node count means the frontier added nothing — done
-        return new.count() == prev.count()
+        nonlocal n_prev
+        if n_prev is None:
+            n_prev = prev.count()
+        n_new = new.count()
+        done = n_new == n_prev
+        n_prev = n_new
+        return done
 
     return iterate(init, step, max_hops, converged=settled)

@@ -130,13 +130,16 @@ def replay_table(
     """One-call helper: split `sf_dir/name.parquet` into chunks under
     `work_dir` and return the streaming DataFrame reading them."""
     src = os.path.join(sf_dir, f"{name}.parquet")
-    # chunk count AND arrival order in the dir name: a cached 8-chunk
-    # event-time-ordered split must never be picked up by a 4-chunk replay
-    # or by one requesting a different order_by (the reuse guard only
-    # checks non-empty)
+    # chunk count, arrival order AND the source file's identity (size,
+    # mtime) in the dir name: a cached 8-chunk event-time-ordered split
+    # must never be picked up by a 4-chunk replay, by one requesting a
+    # different order_by, or after the source was regenerated at the same
+    # path (the reuse guard only checks non-empty)
     order_key = "-".join(order_by) if order_by else ts_col
-    order_tag = hashlib.sha1(order_key.encode()).hexdigest()[:8]
-    chunk_dir = os.path.join(work_dir, f"{name}_chunks{chunks}_{order_tag}")
+    st = os.stat(src)
+    src_key = f"{order_key}|{st.st_size}|{st.st_mtime_ns}"
+    src_tag = hashlib.sha1(src_key.encode()).hexdigest()[:8]
+    chunk_dir = os.path.join(work_dir, f"{name}_chunks{chunks}_{src_tag}")
     if not os.path.isdir(chunk_dir) or not os.listdir(chunk_dir):
         split_into_chunks(src, chunk_dir, ts_col, chunks, order_by=order_by)
     # schema from a batch read of the chunks (ts already µs there)

@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 
 from flink_1_19_source_spark.operators.asof_join import asof_join
 from flink_1_19_source_spark.operators.cumulate import cumulate
-from flink_1_19_source_spark.operators.dedup import connected_components
+from flink_1_19_source_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
+)
 
 _EPOCH = datetime.datetime(2024, 1, 1)
 
@@ -96,10 +99,21 @@ def test_asof_join_matches_reference(spark, left, right_ts):
 
 
 @given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
-        min_size=1,
-        max_size=20,
+    edges=st.one_of(
+        st.lists(
+            st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
+            min_size=1,
+            max_size=20,
+        ),
+        # a path through shuffled ids (diameter up to 29), plus a few
+        # random extra edges
+        st.tuples(
+            st.integers(2, 30).flatmap(lambda n: st.permutations(range(n))),
+            st.lists(
+                st.tuples(st.integers(0, 40), st.integers(0, 40)).filter(lambda e: e[0] != e[1]),
+                max_size=5,
+            ),
+        ).map(lambda t: list(zip(t[0], t[0][1:])) + t[1]),
     )
 )
 @_settings
@@ -107,7 +121,9 @@ def test_connected_components_matches_union_find(spark, edges):
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "id_a long, id_b long"
     ).distinct()
-    got = {(r.id, r.component) for r in connected_components(pairs).collect()}
+    # a 30-node chain plus 5 extra edges has diameter <= 34
+    got = {(r.id, r.component) for r in connected_components(pairs, max_iter=40).collect()}
+    star = {(r.id, r.component) for r in connected_components_star(pairs).collect()}
 
     parent: dict[int, int] = {}
 
@@ -129,6 +145,7 @@ def test_connected_components_matches_union_find(spark, edges):
         nodes.update((a, b))
     want = {(n, find(n)) for n in nodes}
     assert got == want
+    assert star == want
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

@@ -432,8 +432,11 @@ def test_star_cc_equals_propagation_on_path(spark):
     (id, component) map as min-label propagation — pinned on the
     adversarial shape that separates their ROUND bounds: a 64-node
     path (diameter 63).  Star converges in O(log n) alternations;
-    propagation would need ~63 rounds (its max_iter=20 default would
-    NOT converge here, which is exactly why the star variant exists)."""
+    propagation needs ~63 rounds: its max_iter=20 default does NOT
+    converge here (which is exactly why the star variant exists) and
+    must raise rather than return partial labels."""
+    import pytest
+
     from flink_1_19_source_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -443,6 +446,8 @@ def test_star_cc_equals_propagation_on_path(spark):
     df = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
     )
+    with pytest.raises(RuntimeError, match="max_iter=20"):
+        connected_components(df)
     star = {
         (r.id, r.component)
         for r in connected_components_star(df).collect()

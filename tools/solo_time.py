@@ -1,7 +1,10 @@
 """Solo per-query timing (median of N) at $SPARK_GRAFT_SF_DIR — the
 same timed action as bench.py (collect on a warmed session, scrub
 between runs) without the 419-query session history, for A/B
-adjudication of individual optimizations.
+adjudication of individual optimizations. Each line also gives the
+query's Spark job count (median over the runs), read from the status
+tracker for a job group set around each run, so per-job-overhead
+changes can be checked one query at a time.
 
 Usage:
     python tools/solo_time.py [-nN] name [name ...]
@@ -48,16 +51,28 @@ def main() -> None:
         except Exception:
             pass
 
+    sc = spark.sparkContext
+
+    def job_count(group: str) -> int:
+        # the tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     for name in names:
         samples = []
-        for _ in range(runs):
+        jobs = []
+        for i in range(runs):
+            group = f"solo-{name}-{i}"
+            sc.setJobGroup(group, name)
             t0 = time.perf_counter()
             rows = qs[name](spark, sf_dir).collect()
             _ = len(rows)
             samples.append(round(time.perf_counter() - t0, 3))
+            jobs.append(job_count(group))
             scrub()
         print(
             f"{name}: median={statistics.median(samples):.3f}"
+            f" jobs={statistics.median(jobs):g}"
             f" samples={samples} load={os.getloadavg()}",
             flush=True,
         )
