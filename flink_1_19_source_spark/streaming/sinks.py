@@ -110,17 +110,27 @@ class ParquetMergeSink:
     Per micro-batch (all DataFrame ops; only B-row bucket metadata and the
     manifest touch the driver):
 
-    1. fold the batch to ONE row per primary key — last writer wins by
-       ``order_cols`` (or stable within-batch arrival order), so a
-       delete-then-reinsert changelog batch lands as the reinsert, matching
-       UpsertSink exactly;
-    2. compute the batch's touched buckets (``pmod(xxhash64(pk), B)``) —
-       a ≤B-row metadata aggregate;
-    3. for touched buckets only: anti-join that slice of the current
-       version on pk and union the surviving upserts (a key whose final op
-       is '-D' deletes by simply not being re-inserted);
-    4. write ``v{batch_id}/__bucket=K/`` partitions in ONE job;
-    5. atomically flip the ``_CURRENT`` manifest, which maps each bucket
+    1. materialize the batch once (``localCheckpoint``), each row tagged
+       with its arrival order and its bucket (``pmod(xxhash64(pk), B)``);
+       the same job observes the set of touched buckets, a ≤B-value
+       metric — no second pass to find them;
+    2. if no bucket was touched (a micro-batch that emits nothing, e.g.
+       one whose watermark closed no window), skip the read and the
+       write: only the manifest advances, so the replay guard and time
+       travel see the batch as committed;
+    3. read only the touched buckets of the current version, with the
+       table schema kept in the manifest (no footer scan; the schema only
+       ever widens, so it covers every live bucket), and union the batch;
+    4. shuffle by bucket and keep one row per primary key with a window
+       over (bucket, pk): the batch beats the table, and within the batch
+       the last writer by ``order_cols`` (or stable arrival order) wins —
+       so a delete-then-reinsert changelog batch lands as the reinsert,
+       matching UpsertSink exactly, and a null key is a key like any
+       other. A key whose final op is '-D' is simply not written;
+    5. write ``v{batch_id}/__bucket=K/`` partitions in ONE job — the
+       shuffle leaves each touched bucket in one task, so each is ONE
+       file;
+    6. atomically flip the ``_CURRENT`` manifest, which maps each bucket
        to the version that last rewrote it.
 
     Untouched buckets are never read or rewritten — per-batch cost is
@@ -184,70 +194,92 @@ class ParquetMergeSink:
         import os
         import shutil
 
+        from pyspark.sql import Observation
+        from pyspark.sql.types import StructType
         from pyspark.sql.window import Window
 
         man = self._manifest()
         # replay guard: manifest already at or past this batch → no-op
         if man is not None and man["batch"] >= batch_id:
             return
-        # 1. fold to one row per pk (last writer wins, like UpsertSink)
-        batch = batch_df.withColumn("__ord", F.monotonically_increasing_id())
-        order = (
-            [F.col(c).desc() for c in self.order_cols]
-            if self.order_cols
-            else [F.col("__ord").desc()]
+        # 1. materialize the batch once, tagged with its arrival order and
+        # bucket; the same job observes the touched buckets (≤B values)
+        seen = Observation()
+        batch = (
+            batch_df.withColumn("__ord", F.monotonically_increasing_id())
+            .withColumn("__bucket", self._bucket_expr())
+            .observe(seen, F.collect_set("__bucket").alias("touched"))
+            .localCheckpoint(eager=True)
         )
-        w = Window.partitionBy(*self.pk_cols).orderBy(*order)
-        last = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__ord")
-            .localCheckpoint(eager=True)  # one fold, reused 3×
-        )
-        if self.op_col is not None:
-            upserts = last.filter(F.col(self.op_col) != "-D").drop(self.op_col)
-        else:
-            upserts = last
-        keys = last.select(*self.pk_cols)  # incl. deleted keys
-        # 2. touched buckets (≤B-row metadata collect)
-        touched = sorted(
-            r["__b"]
-            for r in keys.select(self._bucket_expr().alias("__b")).distinct().collect()
-        )
+        touched = sorted(seen.get["touched"])
         buckets = dict(man["buckets"]) if man else {}
-        cur_paths = [
-            os.path.join(self.state_dir, buckets[str(k)], f"__bucket={k}")
-            for k in touched
-            if str(k) in buckets
-        ]
-        # 3. merge only the touched slice of the current version.
-        # allowMissingColumns carries schema evolution across a restart:
-        # state written before a column was added null-fills it, state
-        # written after keeps it — the keyed table widens in place.
-        if cur_paths:
-            cur = self.spark.read.option("mergeSchema", "true").parquet(*cur_paths)
-            merged = cur.join(keys, self.pk_cols, "left_anti").unionByName(
-                upserts, allowMissingColumns=True
-            )
-        else:
-            merged = upserts
-        # 4. one job writes every touched bucket as a partition of v{batch}
+        schema = StructType.fromJson(json.loads(man["schema"])) if man else None
         vname = f"v{batch_id}"
-        vdir = os.path.join(self.state_dir, vname)
-        merged.withColumn("__bucket", self._bucket_expr()).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(vdir)
-        # 5. re-point touched buckets (a bucket emptied by deletes writes no
-        # partition dir — drop it from the manifest), flip atomically
-        for k in touched:
-            if os.path.isdir(os.path.join(vdir, f"__bucket={k}")):
-                buckets[str(k)] = vname
-            else:
-                buckets.pop(str(k), None)
+        # 2. an empty batch writes nothing; only the manifest advances
+        if touched:
+            cur_paths = [
+                os.path.join(self.state_dir, buckets[str(k)], f"__bucket={k}")
+                for k in touched
+                if str(k) in buckets
+            ]
+            # 3. the touched slice of the current version, read with the
+            # manifest's table schema (a file written before a column was
+            # added null-fills it), plus the batch, whose new columns
+            # widen the table — schema evolution across a restart
+            rows = batch.withColumn("__new", F.lit(1))
+            if cur_paths:
+                cur = (
+                    self.spark.read.schema(schema)
+                    .parquet(*cur_paths)
+                    .withColumn("__bucket", self._bucket_expr())
+                    .withColumn("__new", F.lit(0))
+                )
+                rows = cur.unionByName(rows, allowMissingColumns=True)
+            # 4. one row per key: the batch beats the table, then last
+            # writer in the batch; a window over (bucket, pk) on rows
+            # shuffled by bucket is null-safe on pk and leaves each bucket
+            # in one task, so the write below is one file per bucket
+            order = [F.col("__new").desc()] + (
+                [F.col(c).desc() for c in self.order_cols]
+                if self.order_cols
+                else [F.col("__ord").desc()]
+            )
+            w = Window.partitionBy("__bucket", *self.pk_cols).orderBy(*order)
+            merged = (
+                rows.repartition("__bucket")
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+            )
+            if self.op_col is not None:
+                # a key whose final op is '-D' is deleted by not being
+                # written; table rows carry no op column
+                merged = merged.filter(
+                    ~F.col(self.op_col).eqNullSafe("-D")
+                ).drop(self.op_col)
+            # 5. one job writes every touched bucket as a partition of
+            # v{batch}
+            vdir = os.path.join(self.state_dir, vname)
+            merged.drop("__rn", "__ord", "__new").write.mode(
+                "overwrite"
+            ).partitionBy("__bucket").parquet(vdir)
+            # re-point touched buckets (a bucket emptied by deletes writes
+            # no partition dir — drop it from the manifest)
+            for k in touched:
+                if os.path.isdir(os.path.join(vdir, f"__bucket={k}")):
+                    buckets[str(k)] = vname
+                else:
+                    buckets.pop(str(k), None)
+        # 6. flip the manifest atomically. Its schema only ever widens, so
+        # it covers every live bucket's file schema
+        table = batch.drop(*[c for c in ("__ord", "__bucket", self.op_col) if c])
+        if schema is not None:
+            table = self.spark.createDataFrame([], schema).unionByName(
+                table, allowMissingColumns=True
+            )
         manifest = {
             "batch": batch_id,
             "buckets": buckets,
-            "schema": upserts.schema.json(),
+            "schema": table.schema.json(),
         }
         tmp = self._ptr + ".tmp"
         with open(tmp, "w") as f:

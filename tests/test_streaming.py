@@ -48,11 +48,18 @@ def test_stream_tumble_converges_to_batch(spark, sf_dir, events_stream_src, work
         "append",
         work_dir,
     )
+    _assert_tumble_matches_batch(spark, sf_dir, got)
+
+
+def _assert_tumble_matches_batch(spark, sf_dir, got):
+    """``got``, a drained 1-hour tumble per event_type (10 minute delay),
+    equals its batch twin on every closed window."""
+    import datetime
+
     e = load_table(spark, sf_dir, "events")
     # append mode emits a window only once the watermark passes its end:
     # the final watermark is max(ts) - delay, so compare the closed set
     wm = e.agg(F.max("ts")).collect()[0][0]
-    import datetime
     closed = wm - datetime.timedelta(minutes=10)
     batch = (
         e.groupBy("event_type", F.window("ts", "1 hour").alias("w"))
@@ -552,6 +559,126 @@ def test_parquet_merge_sink_crash_replay_is_deterministic(spark, work_dir):
     assert got == want == {(1, "a2"), (2, "b"), (3, "c")}
 
 
+def test_parquet_merge_sink_null_keys_match_upsert_sink(spark, work_dir):
+    """A null primary-key column is a key value like any other: a later
+    row with the same (null-containing) key replaces the earlier one,
+    exactly as in UpsertSink, on single- and two-column keys."""
+    import os
+
+    from flink_1_19_source_spark.streaming import sinks as sk
+
+    mk = lambda rows: spark.createDataFrame(rows, "k1 long, k2 long, v string")  # noqa: E731
+    batches = [
+        [(None, None, "a"), (None, 1, "a"), (1, None, "a"), (1, 1, "a"), (2, 2, "a")],
+        [(None, None, "b"), (None, 1, "b"), (1, None, "b"), (1, 1, "b"), (3, 3, "b")],
+    ]
+    for pk in (["k1"], ["k1", "k2"]):
+        pms = sk.ParquetMergeSink(
+            spark, os.path.join(work_dir, f"pms_null_{len(pk)}"), pk_cols=pk,
+            num_buckets=4,
+        )
+        ups = sk.UpsertSink(pk)
+        for i, rows in enumerate(batches):
+            pms(mk(rows), i)
+            ups(mk(rows), i)
+        got = sorted(
+            (tuple(r) for r in pms.snapshot_df().select("k1", "k2", "v").collect()),
+            key=repr,
+        )
+        want = sorted(((d["k1"], d["k2"], d["v"]) for d in ups.snapshot()), key=repr)
+        assert got == want, (pk, got, want)
+
+
+def test_parquet_merge_sink_empty_batch_only_advances_manifest(spark, work_dir):
+    """A batch with no rows commits (the manifest moves to its id) but
+    writes no version dir; replaying it is a no-op; with history
+    retained, time travel to it reads the state as of the batch before."""
+    import json
+    import os
+
+    from flink_1_19_source_spark.streaming import sinks as sk
+
+    state = os.path.join(work_dir, "pms_empty")
+    sink = sk.ParquetMergeSink(
+        spark, state, pk_cols=["k"], num_buckets=4, retain_history=True
+    )
+    mk = lambda rows: spark.createDataFrame(rows, "k long, v string")  # noqa: E731
+    sink(mk([(1, "a"), (2, "b")]), 0)
+    sink(mk([]), 1)
+    cur = os.path.join(state, "_CURRENT")
+    man1 = open(cur).read()
+    assert json.loads(man1)["batch"] == 1
+    assert not os.path.exists(os.path.join(state, "v1"))
+    sink(mk([]), 1)  # replay of the empty batch
+    assert open(cur).read() == man1
+    assert not os.path.exists(os.path.join(state, "v1"))
+
+    def rows(df):
+        return sorted((r.k, r.v) for r in df.collect())
+
+    assert rows(sink.snapshot_df(as_of_batch=1)) == rows(
+        sink.snapshot_df(as_of_batch=0)
+    ) == [(1, "a"), (2, "b")]
+    sink(mk([(2, "b2"), (3, "c")]), 2)  # later batches merge as usual
+    assert rows(sink.snapshot_df()) == [(1, "a"), (2, "b2"), (3, "c")]
+    assert rows(sink.snapshot_df(as_of_batch=1)) == [(1, "a"), (2, "b")]
+
+
+def test_parquet_merge_sink_writes_one_file_per_bucket(spark, work_dir):
+    """However many partitions the batch (and the state read back) come
+    in, each touched bucket of a version is written as one parquet file."""
+    import os
+
+    from flink_1_19_source_spark.streaming import sinks as sk
+
+    state = os.path.join(work_dir, "pms_one_file")
+    sink = sk.ParquetMergeSink(spark, state, pk_cols=["k"], num_buckets=8)
+    mk = lambda rows: spark.createDataFrame(rows, "k long, v string").repartition(4)  # noqa: E731
+
+    def files_per_bucket(version):
+        vdir = os.path.join(state, version)
+        return {
+            d: len([f for f in os.listdir(os.path.join(vdir, d)) if f.endswith(".parquet")])
+            for d in os.listdir(vdir)
+            if d.startswith("__bucket=")
+        }
+
+    sink(mk([(i, f"v{i}") for i in range(64)]), 0)
+    v0 = files_per_bucket("v0")
+    assert len(v0) == 8 and set(v0.values()) == {1}, v0
+    # merge path: touched buckets read back and rewritten, still one file
+    sink(mk([(i, f"w{i}") for i in range(0, 64, 3)]), 1)
+    v1 = files_per_bucket("v1")
+    assert v1 and set(v1.values()) == {1}, v1
+    got = {r.k: r.v for r in sink.snapshot_df().collect()}
+    assert got == {i: (f"w{i}" if i % 3 == 0 else f"v{i}") for i in range(64)}
+
+
+def test_parquet_merge_sink_keeps_columns_a_later_batch_lacks(spark, work_dir):
+    """The table schema only widens: after a batch adds a column, a batch
+    without it (a restart on the old source schema) rewrites the buckets
+    it touches without dropping that column from the rows it leaves."""
+    import os
+
+    from flink_1_19_source_spark.streaming import sinks as sk
+
+    sink = sk.ParquetMergeSink(
+        spark, os.path.join(work_dir, "pms_widen"), pk_cols=["k"], num_buckets=2
+    )
+    sink(spark.createDataFrame([(i, "a") for i in range(8)], "k long, v string"), 0)
+    sink(
+        spark.createDataFrame([(i, "b", i * 10) for i in range(8)], "k long, v string, q long"),
+        1,
+    )
+    narrow = spark.createDataFrame([(0, "c"), (9, "c")], "k long, v string")
+    sink(narrow, 2)
+    sink(narrow, 3)  # the table schema must outlive one narrow commit
+    got = {r.k: (r.v, r.q) for r in sink.snapshot_df().collect()}
+    want = {i: ("b", i * 10) for i in range(1, 8)}
+    want.update({0: ("c", None), 9: ("c", None)})
+    assert got == want, got
+
+
 def test_proc_time_fire_purge_replayed_batch_is_idempotent(spark, work_dir):
     """A crash-replayed micro-batch (same batch_id, same rows — the
     foreachBatch retry contract) must overwrite its own partial-state
@@ -679,3 +806,51 @@ def test_replay_cache_follows_regenerated_source(spark, tmp_path):
     assert replayed("s_replay_v1") == [1, 2, 3, 4]
     write([10, 20, 30])
     assert replayed("s_replay_v2") == [10, 20, 30]
+
+
+def test_tumble_restart_with_changelog_checkpointing(spark, sf_dir, tmp_path):
+    """The session's RocksDB state store commits each micro-batch as a
+    changelog file per state partition. A tumble stream stopped halfway
+    and restarted on the same checkpoint restores from those changelogs
+    and still converges to its batch twin."""
+    import os
+    import re
+
+    src = os.path.join(sf_dir, "events.parquet")
+    chunks, held = str(tmp_path / "chunks"), str(tmp_path / "held")
+    replay.split_into_chunks(src, chunks, "ts", 4)
+    os.makedirs(held)
+    files = sorted(os.listdir(chunks))
+    for f in files[2:]:
+        shutil.move(os.path.join(chunks, f), os.path.join(held, f))
+    schema = spark.read.parquet(chunks).schema
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def drain():
+        sdf = replay.read_stream(spark, chunks, schema, 1)
+        q = (
+            ops.tumble_agg(sdf, "ts", "1 hour", ["event_type"])
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    drain()  # first half of the chunks
+    for f in files[2:]:
+        shutil.move(os.path.join(held, f), os.path.join(chunks, f))
+    drain()  # restart on the same checkpoint
+
+    state = os.path.join(ckpt, "state", "0")
+    changelogs = [
+        f
+        for p in os.listdir(state)
+        if p.isdigit()
+        for f in os.listdir(os.path.join(state, p))
+        if re.fullmatch(r"\d+\.changelog", f)
+    ]
+    assert changelogs, sorted(os.listdir(state))
+    _assert_tumble_matches_batch(spark, sf_dir, spark.read.parquet(out))
