@@ -96,32 +96,19 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
+def _shingle_intersections(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.6,
-    stop_shingle_df_cap: int | None = None,
+    n: int,
+    stop_shingle_df_cap: int | None,
 ) -> DataFrame:
-    """Exact Jaccard near-dup pairs via inverted shingle index.
-
-    |A ∩ B| by counting shared shingles; |A ∪ B| = |A|+|B|−|∩|. Output:
-    (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
-
-    Scale note: the self-join key is the shingle, so each shingle with
-    document frequency d contributes O(d²) candidate pairs — one hot
-    boilerplate sentence makes the join quadratic in its df. Pass
-    ``stop_shingle_df_cap`` to drop shingles with df > cap *before* the
-    self-join (one extra agg + a semi-join on the same shuffle key): the
-    fan-out is then bounded by corpus_shingles × cap. Jaccard is computed
-    over the capped shingle universe (sizes exclude dropped shingles too) —
-    on a corpus where no shingle exceeds the cap the result is identical to
-    the uncapped run; when the cap binds it is the standard stop-shingle
-    approximation (hot shingles carry no near-dup signal anyway).
-    Default off: test corpora are synthetic and bounded; at 100 TB set a
-    cap around 10⁴.
-    """
+    """Inverted shingle index shared by the n-gram pair finders: every
+    document pair (id_a < id_b) sharing at least one shingle, with the
+    shared-shingle count and both shingle-set sizes.  Output:
+    (id_a, id_b, n_inter, sz_a, sz_b).  With ``stop_shingle_df_cap``,
+    shingles whose document frequency exceeds the cap are dropped before
+    the self-join, from the sizes too (see ngram_jaccard_pairs)."""
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
@@ -149,6 +136,38 @@ def ngram_jaccard_pairs(
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
+        .select("id_a", "id_b", "n_inter", "sz_a", "sz_b")
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.6,
+    stop_shingle_df_cap: int | None = None,
+) -> DataFrame:
+    """Exact Jaccard near-dup pairs via inverted shingle index.
+
+    |A ∩ B| by counting shared shingles; |A ∪ B| = |A|+|B|−|∩|. Output:
+    (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
+
+    Scale note: the self-join key is the shingle, so each shingle with
+    document frequency d contributes O(d²) candidate pairs — one hot
+    boilerplate sentence makes the join quadratic in its df. Pass
+    ``stop_shingle_df_cap`` to drop shingles with df > cap *before* the
+    self-join (one extra agg + a semi-join on the same shuffle key): the
+    fan-out is then bounded by corpus_shingles × cap. Jaccard is computed
+    over the capped shingle universe (sizes exclude dropped shingles too) —
+    on a corpus where no shingle exceeds the cap the result is identical to
+    the uncapped run; when the cap binds it is the standard stop-shingle
+    approximation (hot shingles carry no near-dup signal anyway).
+    Default off: test corpora are synthetic and bounded; at 100 TB set a
+    cap around 10⁴.
+    """
+    return (
+        _shingle_intersections(df, id_col, text_col, n, stop_shingle_df_cap)
         .withColumn(
             "jaccard",
             F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")),
@@ -173,33 +192,7 @@ def ngram_containment_pairs(
     ngram_jaccard_pairs; each unordered intersection yields up to two
     directed rows.  Output: (contained_id, container_id, containment,
     jaccard) with containment >= threshold."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-    if stop_shingle_df_cap is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= stop_shingle_df_cap)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle", "left_semi")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    both = inter.join(sa, "id_a").join(sb, "id_b")
+    both = _shingle_intersections(df, id_col, text_col, n, stop_shingle_df_cap)
     jac = F.col("n_inter") / (
         F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
     )

@@ -386,7 +386,7 @@ def s_hll_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import replay
     from . import streaming_queries as _sq
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     b = 8
     m = 1 << b
@@ -432,8 +432,7 @@ def s_hll_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         _swap_sketch_state(regs_path, tmp, bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     # estimate from the register table, via the same estimator expression
     # as the one-shot sketch: feed hll_distinct a reconstruction? simpler:
@@ -512,7 +511,7 @@ def s_bloom_stream_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import replay
     from . import streaming_queries as _sq
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     m, k = _BLOOM_M, _BLOOM_K
     wd = _work_dir(sf_dir, "s_bloom")
@@ -536,8 +535,7 @@ def s_bloom_stream_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         _swap_sketch_state(bits_path, tmp, bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     bits = spark.read.parquet(bits_path)
     probe = load_table(spark, sf_dir, "customer").filter(
@@ -651,7 +649,7 @@ def s_quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import replay
     from . import streaming_queries as _sq
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     wd = _work_dir(sf_dir, "s_bkq")
     run = uuid.uuid4().hex[:8]
@@ -694,8 +692,7 @@ def s_quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         _swap_sketch_state(state_path, tmp, bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     samp = spark.read.parquet(state_path)
     out = sketches.bottomk_quantiles(samp, "event_type", "value").localCheckpoint(
@@ -769,7 +766,7 @@ def s_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
     from . import streaming_queries as _sq
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     wd = _work_dir(sf_dir, "s_cms")
     run = uuid.uuid4().hex[:8]
@@ -790,8 +787,7 @@ def s_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fold(batch, bid: int) -> None:
         store.append(sketches.cms_cells(batch, "user_id").coalesce(1), bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     cells = (
         store.read()

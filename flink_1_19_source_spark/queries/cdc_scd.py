@@ -144,7 +144,7 @@ def _scd2_run(
 
     from ..streaming import replay
     from ..streaming.scd2 import Scd2Sink
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     run = "crash" if crash_once_at is not None else f"clean{chunks}"
     wd = _work_dir(sf_dir, f"s_scd2_{run}")
@@ -155,7 +155,7 @@ def _scd2_run(
     sink = Scd2Sink(
         spark, wd, "user_id", seq_cols=["ms", "version_event_id"]
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(df: DataFrame, batch_id: int) -> None:
         row = F.struct(F.col("user_id"), F.col("event_id"), F.col("value"))
@@ -175,22 +175,13 @@ def _scd2_run(
             ).alias("env")
         )
         sink(_parse_changes(env), batch_id)
-        if crash_once_at == int(batch_id) and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(batch_id):
             raise RuntimeError("injected crash after full batch effects")
 
     ckpt = os.path.join(wd, "ckpt")
     for d in ("scdstate", "scdout", "ckpt"):
         shutil.rmtree(os.path.join(wd, d), ignore_errors=True)
-    with _stream_shuffle_partitions(spark):
-        for _ in range(crash_times if crash_once_at is not None else 0):
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     return sink.history_df()
 
@@ -260,7 +251,7 @@ def _window_retract_run(
     import shutil
 
     from ..streaming import replay
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     run = "crash" if crash_once_at is not None else f"clean{chunks}"
     wd = _work_dir(sf_dir, f"s_winretract_{run}")
@@ -280,7 +271,7 @@ def _window_retract_run(
             return spark.read.parquet(d)
         return spark.createDataFrame([], schema)
 
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(df: DataFrame, batch_id: int) -> None:
         b = int(batch_id)
@@ -366,22 +357,13 @@ def _window_retract_run(
                         shutil.rmtree(
                             os.path.join(base, name), ignore_errors=True
                         )
-        if crash_once_at == int(batch_id) and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(batch_id):
             raise RuntimeError("injected crash after full batch effects")
 
     ckpt = os.path.join(wd, "ckpt")
     for d in ("mirror", "winstate", "ckpt"):
         shutil.rmtree(os.path.join(wd, d), ignore_errors=True)
-    with _stream_shuffle_partitions(spark):
-        for _ in range(crash_times if crash_once_at is not None else 0):
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     ticks = sorted(
         d for d in os.listdir(wdir) if d.startswith("tick-")

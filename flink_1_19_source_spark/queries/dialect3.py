@@ -360,19 +360,21 @@ def sql_set_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     'k'='v'`` applies a session conf (echoed back key/value, like
     Flink), the next statement runs UNDER it, and ``RESET 'k'``
     restores the default — asserted live against the session conf on
-    both edges.  The governed query's VALUES are partitioning-
-    independent (exact-decimal sum), which is exactly what makes a
-    session-conf statement safe to certify."""
+    both edges.  The governed query's VALUES are codegen-independent
+    (exact-decimal sum), which is exactly what makes a session-conf
+    statement safe to certify.  The key is a codegen switch, not the
+    shuffle-partition count: the state-partition pin of the replayed
+    streams has one home, `streaming.replay`."""
     from ..functions.flink_sql import flink_sql
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    key = "spark.sql.shuffle.partitions"
+    key = "spark.sql.codegen.wholeStage"
     before = spark.conf.get(key)
     try:
-        echo = flink_sql(spark, f"SET '{key}' = '16'").collect()
-        if (echo[0].key, echo[0].value) != (key, "16"):
+        echo = flink_sql(spark, f"SET '{key}' = 'false'").collect()
+        if (echo[0].key, echo[0].value) != (key, "false"):
             raise AssertionError(f"SET echo wrong: {echo}")
-        if spark.conf.get(key) != "16":
+        if spark.conf.get(key) != "false":
             raise AssertionError("SET did not apply to the session conf")
         out = flink_sql(
             spark,

@@ -28,12 +28,7 @@ from ..registry import register
 from ..streaming import count_window, replay, sinks
 from ..streaming.proc_time_trigger import ProcTimeFirePurge
 from ..tables import load_table
-from .streaming_queries import (
-    _drain_to_memory,
-    _events_stream,
-    _stream_shuffle_partitions,
-    _work_dir,
-)
+from .streaming_queries import _drain_to_memory, _events_stream, _work_dir
 
 #: suppliers share the bigint node space with customers via this offset
 #: (max custkey at sf1 is 150k, far below it)
@@ -192,8 +187,7 @@ def s_proc_time_trigger_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     trig = ProcTimeFirePurge(spark, wd, ["user_id"], "value", every=2)
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, trig, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, trig, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     return trig.fired_df()
 
@@ -236,8 +230,7 @@ def s_proc_time_accumulate_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     trig = ProcTimeFirePurge(spark, wd, ["user_id"], "value", every=2,
                              purge=False)
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, trig, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, trig, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     return trig.fired_df()
 
@@ -435,12 +428,11 @@ def _state_ttl_run(
         left_cols=[F.col("event_id").alias("a_event_id")],
         right_cols=[F.col("event_id").alias("b_event_id")],
     )
-    crashed = {"done": False}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(df: DataFrame, batch_id: int) -> None:
         join(df, batch_id)
-        if crash_once_at == int(batch_id) and not crashed["done"]:
-            crashed["done"] = True
+        if crash.fire(batch_id):
             # worst spot: state dirs, output dir AND eviction all
             # applied, checkpoint unmarked — the replay re-runs the
             # whole batch on top of the mutated disk state
@@ -450,15 +442,7 @@ def _state_ttl_run(
     shutil.rmtree(ckpt, ignore_errors=True)
     for d in ("stateL", "stateR", "out"):
         shutil.rmtree(os.path.join(wd, d), ignore_errors=True)
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     return join.result_df()
 
@@ -547,26 +531,17 @@ def _state_ttl_agg_run(
         spark, wd, "user_id", ttl=ttls["e"],
         val=(F.col("event_id") % 97).cast("long"),
     )
-    crashed = {"done": False}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(df: DataFrame, batch_id: int) -> None:
         agg(df.filter(F.col("event_type") == "signup"), batch_id)
-        if crash_once_at == int(batch_id) and not crashed["done"]:
-            crashed["done"] = True
+        if crash.fire(batch_id):
             raise RuntimeError("injected crash after full batch effects")
 
     ckpt = os.path.join(wd, "ckpt")
     for d in ("aggstate", "aggout", "ckpt"):
         shutil.rmtree(os.path.join(wd, d), ignore_errors=True)
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     return agg.result_df()
 

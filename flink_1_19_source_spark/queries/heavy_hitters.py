@@ -209,9 +209,7 @@ def _heavy_hitters_stream_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_heavy_hitters")
     run = uuid.uuid4().hex[:8]
@@ -233,7 +231,7 @@ def _heavy_hitters_stream_run(
         spark, sf_dir, "documents", os.path.join(wd, "src"),
         ts_col="doc_id", chunks=_CHUNKS, order_by=["doc_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         # same r12 shape as the batch query: the per-batch MG summary is
@@ -247,26 +245,14 @@ def _heavy_hitters_stream_run(
         cand_store.append(
             toks.mapInPandas(mg_parts(K_HH), "w string").distinct(), bid
         )
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             # torn: candidates carry the batch, counts do not
             raise RuntimeError("injected crash between store appends")
         cnt_store.append(
             toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")), bid
         )
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(
-                        sdf, fold, checkpoint_dir=ckpt
-                    )
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     cand = cand_store.read().distinct()
     counts = (

@@ -37,11 +37,7 @@ from ..registry import register
 from ..sources.kafka_like import FileTopic, decode_json_value
 from ..streaming.partition_watermark import PartitionWatermarkTracker
 from ..tables import load_table
-from .streaming_queries import (
-    _events_stream,
-    _stream_shuffle_partitions,
-    _work_dir,
-)
+from .streaming_queries import _events_stream, _work_dir
 
 _PAYLOAD = StructType(
     [
@@ -215,8 +211,7 @@ def s_kafka_tumble_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wd = _work_dir(sf_dir, "s_kafka_tumble")
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_available_now(agg, "s_kafka_tumble_q", "append", ckpt)
+    replay.run_available_now(agg, "s_kafka_tumble_q", "append", ckpt)
     out = spark.table("s_kafka_tumble_q")
     shutil.rmtree(ckpt, ignore_errors=True)
     return out
@@ -265,11 +260,10 @@ def s_upsert_kafka_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            topn.streaming_keep_last(sdf), produce_batch,
-            checkpoint_dir=ckpt, output_mode="update",
-        )
+    replay.run_foreach_batch(
+        topn.streaming_keep_last(sdf), produce_batch,
+        checkpoint_dir=ckpt, output_mode="update",
+    )
     from ..sources.kafka_like import decode_json_value as _dec
     from pyspark.sql.types import StructField as _SF, StructType as _ST
 
@@ -361,8 +355,7 @@ def s_kafka_idle_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         tracker.observe(batch_df)  # P-row aggregate; rows stay distributed
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(raw, sink, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(raw, sink, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
 
     wm = tracker.combined()
@@ -471,10 +464,7 @@ def s_cdc_debezium_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..streaming import sinks as _sinks
-    from .streaming_queries import (
-        _stream_shuffle_partitions,
-        _work_dir,
-    )
+    from .streaming_queries import _work_dir
     from ..streaming import replay as _replay
     from pyspark.sql.window import Window
 
@@ -538,8 +528,7 @@ def s_cdc_debezium_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(changelog, bid)
 
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        _replay.run_foreach_batch(parsed, apply, checkpoint_dir=ckpt)
+    _replay.run_foreach_batch(parsed, apply, checkpoint_dir=ckpt)
     out = (
         sink.snapshot_df()
         .select("user_id", "event_id", F.round("value", 6).alias("value"))

@@ -105,7 +105,7 @@ def _minhash_dedup_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import _CHUNKS, _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_mhdedup")
     run = uuid.uuid4().hex[:8]
@@ -128,7 +128,7 @@ def _minhash_dedup_run(
         ts_col="doc_id", chunks=_CHUNKS, order_by=["doc_id"],
         files_per_trigger=2,
     )
-    crashed = {"done": False}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(batch, bid: int) -> None:
         buckets = dedup.minhash_band_buckets(
@@ -162,8 +162,7 @@ def _minhash_dedup_run(
                 F.coalesce("n_dup_bands", F.lit(0)).cast("long").alias("n_dup_bands"),
             )
         )
-        if crash_once_at == bid and not crashed["done"]:
-            crashed["done"] = True
+        if crash.fire(bid):
             # torn write: a partial state segment lands, then the
             # "process" dies before the verdicts commit
             flat.limit(5).write.mode("overwrite").parquet(
@@ -176,15 +175,7 @@ def _minhash_dedup_run(
         )
         store.append(flat, bid)
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     outs = sorted(_glob.glob(os.path.join(out_dir, "out-*")))
     res = (
@@ -531,7 +522,7 @@ def _chunk_dedup_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import _CHUNKS, _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_chunkdedup")
     run = uuid.uuid4().hex[:8]
@@ -616,8 +607,7 @@ def _chunk_dedup_run(
         )
         store.append(chunks.select("chunk_hash", "ckey"), bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
     return spark.read.parquet(os.path.join(out_dir, "out-*")).localCheckpoint(
         eager=True
     )
@@ -789,7 +779,7 @@ def _priority_dedup_run(
 
     from ..operators import text_analysis as ta
     from ..streaming import replay
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     run = "crash" if crash_once_at is not None else f"clean{chunks}"
     wd = _work_dir(sf_dir, f"s_priodedup_{run}")
@@ -800,7 +790,7 @@ def _priority_dedup_run(
     )
     mdir = os.path.join(wd, "mirror")
     schema = "fp string, doc_id long, lang string, n_chars long, n_copies long"
-    crashed = {"done": False}
+    crash = replay.CrashPlan(crash_once_at)
 
     def tick(b: int) -> str:
         return os.path.join(mdir, f"tick-{b:05d}")
@@ -877,22 +867,13 @@ def _priority_dedup_run(
                     shutil.rmtree(
                         os.path.join(mdir, name), ignore_errors=True
                     )
-        if crash_once_at == int(batch_id) and not crashed["done"]:
-            crashed["done"] = True
+        if crash.fire(batch_id):
             raise RuntimeError("injected crash after full batch effects")
 
     ckpt = os.path.join(wd, "ckpt")
     for d in ("mirror", "ckpt"):
         shutil.rmtree(os.path.join(wd, d), ignore_errors=True)
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     ticks = sorted(d for d in os.listdir(mdir) if d.startswith("tick-"))
     return spark.read.parquet(os.path.join(mdir, ticks[-1])).select(

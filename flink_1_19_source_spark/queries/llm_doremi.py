@@ -272,7 +272,7 @@ def _doremi_stream_run(
     from ..operators import text_analysis as ta
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
@@ -294,7 +294,7 @@ def _doremi_stream_run(
         ts_col="doc_id", chunks=_DOREMI_CHUNKS, order_by=["doc_id"],
     )
 
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         btoks = batch.select(
@@ -303,23 +303,11 @@ def _doremi_stream_run(
             F.explode(ta.tokens(F.col("text"))).alias("w"),
         )
         store.append(_cell_excess(btoks, cg, ng, cd, nd), bid)
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             # ledger state mutated, checkpoint uncommitted
             raise RuntimeError("injected crash after ledger append")
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(
-                        sdf, fold, checkpoint_dir=ckpt
-                    )
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     cell = store.read().localCheckpoint(eager=True)
     out = _weights_from_cells(

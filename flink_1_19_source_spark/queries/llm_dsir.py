@@ -491,7 +491,7 @@ def s_dsir_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import _CHUNKS, _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_dsir")
     run = uuid.uuid4().hex[:8]
@@ -512,8 +512,7 @@ def s_dsir_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fold(batch, bid: int) -> None:
         store.append(_dsir_bucket_stats(_dsir_bt(batch)).coalesce(1), bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     stats = (
         store.read()
@@ -694,9 +693,7 @@ def _quota_stream_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_quota")
     run = uuid.uuid4().hex[:8]
@@ -710,7 +707,7 @@ def _quota_stream_run(
         spark, sf_dir, "documents", os.path.join(wd, "src"),
         ts_col="doc_id", chunks=chunks or _CHUNKS, order_by=["doc_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(batch, bid: int) -> None:
         store.append(
@@ -719,19 +716,10 @@ def _quota_stream_run(
             .coalesce(1),
             bid,
         )
-        if crash_once_at == bid and crashed["n"] < 1:
-            crashed["n"] += 1
+        if crash.fire(bid):
             raise RuntimeError("injected crash after segment append")
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     counts = (
         store.read()

@@ -210,9 +210,7 @@ def _hnsw_ingest_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     m = graph_ann.M_EDGES
     wd = _work_dir(sf_dir, "s_hnsw")
@@ -240,7 +238,7 @@ def _hnsw_ingest_run(
         spark, sf_dir, "embeddings", os.path.join(wd, "src"),
         ts_col="vec_id", chunks=_CHUNKS, order_by=["vec_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         new = graph_ann.with_levels(
@@ -286,25 +284,13 @@ def _hnsw_ingest_run(
             new, all_flagged, m, n_new=n_new, n_all=n_old + n_new
         )
         edges_store.append(edge_seg, bid)
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             # worst spot: the two stores are TORN — edges carry the
             # batch, nodes do not, checkpoint uncommitted
             raise RuntimeError("injected crash between store appends")
         nodes_store.append(new, bid)
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(
-                        sdf, fold, checkpoint_dir=ckpt
-                    )
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     nodes = nodes_store.read().localCheckpoint(eager=True)
     ranked = topm(edges_store.read()).localCheckpoint(eager=True)
@@ -763,9 +749,7 @@ def _hnsw_blocked_ingest_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     m = graph_ann.M_EDGES
     cent = _fixture_codebook(load_table(spark, sf_dir, "embeddings"))
@@ -812,7 +796,7 @@ def _hnsw_blocked_ingest_run(
         spark, sf_dir, "embeddings", os.path.join(wd, "src"),
         ts_col="vec_id", chunks=_CHUNKS, order_by=["vec_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         new = graph_ann.ivf_assigned_quantized(
@@ -885,25 +869,13 @@ def _hnsw_blocked_ingest_run(
             .select("lvl", "src", "dst", "sim")
         )
         edges_store.append(edge_seg, bid)
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             # worst spot: the two stores are TORN — edges carry the
             # batch, nodes do not, checkpoint uncommitted
             raise RuntimeError("injected crash between store appends")
         nodes_store.append(new, bid)
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(
-                        sdf, fold, checkpoint_dir=ckpt
-                    )
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     nodes = nodes_store.read().localCheckpoint(eager=True)
     ranked = topm(edges_store.read()).localCheckpoint(eager=True)

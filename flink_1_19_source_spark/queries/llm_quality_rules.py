@@ -609,9 +609,7 @@ def _quality_gate_stream_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     def take_k(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("lang").orderBy("pri", "doc_id")
@@ -640,7 +638,7 @@ def _quality_gate_stream_run(
         spark, sf_dir, "documents", os.path.join(wd, "src"),
         ts_col="doc_id", chunks=chunks or _CHUNKS, order_by=["doc_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(batch, bid: int) -> None:
         g = _gopher_frame(batch).select("doc_id", "gopher_pass")
@@ -671,8 +669,7 @@ def _quality_gate_stream_run(
             ).coalesce(1),
             bid,
         )
-        if crash_once_at == bid and crashed["n"] < 1:
-            crashed["n"] += 1
+        if crash.fire(bid):
             raise RuntimeError(
                 "injected crash between the two segment stores"
             )
@@ -684,15 +681,7 @@ def _quality_gate_stream_run(
         )
         cand_store.append(take_k(cand).coalesce(1), bid)
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     counts = counts_store.read().groupBy("lang").agg(
         F.sum("n_docs").cast("long").alias("n_docs"),

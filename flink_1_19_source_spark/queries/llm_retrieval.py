@@ -47,7 +47,7 @@ def s_ivf_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import _CHUNKS, _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _CHUNKS, _work_dir
 
     e = load_table(spark, sf_dir, "embeddings")
     cent_rows = (
@@ -74,8 +74,7 @@ def s_ivf_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("list_id", F.explode(corpus_assign(F.col("nvec"))))
         store.append(seg, bid)
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
 
     index = store.read()
     q = e.filter(F.col("vec_id") < 8)

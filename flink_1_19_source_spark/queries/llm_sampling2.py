@@ -106,9 +106,7 @@ def _exact_k_stream_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     def take_k(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("lang").orderBy("pri", "doc_id")
@@ -127,7 +125,7 @@ def _exact_k_stream_run(
         spark, sf_dir, "documents", os.path.join(wd, "src"),
         ts_col="doc_id", chunks=chunks or _CHUNKS, order_by=["doc_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at)
 
     def fold(batch, bid: int) -> None:
         cand = batch.select(
@@ -137,19 +135,10 @@ def _exact_k_stream_run(
             .alias("pri"),
         )
         store.append(take_k(cand).coalesce(1), bid)
-        if crash_once_at == bid and crashed["n"] < 1:
-            crashed["n"] += 1
+        if crash.fire(bid):
             raise RuntimeError("injected crash after segment append")
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     w = Window.partitionBy("lang").orderBy("pri", "doc_id")
     out = (

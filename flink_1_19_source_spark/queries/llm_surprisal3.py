@@ -242,9 +242,7 @@ def _kn3_stats_stream_run(
     from ..operators import text_analysis as ta
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_kn3")
     run = uuid.uuid4().hex[:8]
@@ -262,7 +260,7 @@ def _kn3_stats_stream_run(
         ts_col="doc_id", chunks=_CHUNKS, order_by=["doc_id"],
     )
 
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         tri = _kn3_tri(
@@ -274,22 +272,10 @@ def _kn3_stats_stream_run(
             .coalesce(1),
             bid,
         )
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             raise RuntimeError("injected crash after segment append")
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(
-                        sdf, fold, checkpoint_dir=ckpt
-                    )
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     c3 = (
         store.read()

@@ -346,9 +346,7 @@ def s_perceptron_train_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import jdbc as jdbc_mod
     from ..streaming import replay, retract
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_perceptron")
     sdf = replay.replay_table(
@@ -387,8 +385,7 @@ def s_perceptron_train_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ledger.mark(spark, batch_id)
 
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     # post-drain refresh: the final model over the complete log
     feats = log.read().persist()
@@ -535,11 +532,7 @@ def s_fuzzy_contamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import corpus as corpus_ops
     from ..streaming import replay
-    from .streaming_queries import (
-        _CHUNKS,
-        _stream_shuffle_partitions,
-        _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_fuzzy_contam")
     run = uuid.uuid4().hex[:8]
@@ -574,8 +567,7 @@ def s_fuzzy_contamination_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import shutil
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     bench.unpersist()
     return spark.read.parquet(os.path.join(out_dir, "out-*")).localCheckpoint(

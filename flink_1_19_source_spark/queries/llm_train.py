@@ -208,9 +208,7 @@ def s_logistic_train_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import replay, retract
     from ..streaming.segments import SegmentStore
     from .llm_text import _doc_features
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_logistic")
     sdf = replay.replay_table(
@@ -249,8 +247,7 @@ def s_logistic_train_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ledger.mark(spark, batch_id)
 
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     # post-drain refresh: the final model over the complete log
     feats = log.read().persist()

@@ -480,9 +480,7 @@ def _unigram_stats_stream_run(
 
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
-    from .streaming_queries import (
-        _CHUNKS, _stream_shuffle_partitions, _work_dir,
-    )
+    from .streaming_queries import _CHUNKS, _work_dir
 
     wd = _work_dir(sf_dir, "s_unigram")
     run = uuid.uuid4().hex[:8]
@@ -496,7 +494,7 @@ def _unigram_stats_stream_run(
         spark, sf_dir, "documents", os.path.join(wd, "src"),
         ts_col="doc_id", chunks=_CHUNKS, order_by=["doc_id"],
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch, bid: int) -> None:
         tok = (
@@ -512,20 +510,10 @@ def _unigram_stats_stream_run(
             .coalesce(1),
             bid,
         )
-        if crash_once_at == bid and crashed["n"] < crash_times:
-            crashed["n"] += 1
+        if crash.fire(bid):
             raise RuntimeError("injected crash after segment append")
 
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            for _ in range(crash_times):
-                try:
-                    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                    raise AssertionError("crash injection never fired")
-                except Exception as e:
-                    if "injected crash" not in str(e):
-                        raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
 
     words = (
         store.read()

@@ -214,7 +214,7 @@ def s_theta_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import replay
     from ..streaming.segments import SegmentStore
     from . import streaming_queries as _sq
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     wd = _work_dir(sf_dir, "s_theta")
     run = uuid.uuid4().hex[:8]
@@ -233,8 +233,7 @@ def s_theta_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             bid,
         )
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            sdf, fold, checkpoint_dir=os.path.join(wd, f"ckpt-{run}")
-        )
+    replay.run_foreach_batch(
+        sdf, fold, checkpoint_dir=os.path.join(wd, f"ckpt-{run}")
+    )
     return _theta_result(spark, sf_dir, store.read().select("side", "h"))

@@ -465,7 +465,7 @@ def s_gzip_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..streaming import replay
-    from .streaming_queries import _stream_shuffle_partitions, _work_dir
+    from .streaming_queries import _work_dir
 
     d = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -486,9 +486,8 @@ def s_gzip_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"s_gzip_q_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_available_now(agg, name, output_mode="complete",
-                                 checkpoint_dir=ckpt)
+    replay.run_available_now(agg, name, output_mode="complete",
+                             checkpoint_dir=ckpt)
     out = spark.table(name).localCheckpoint()
     shutil.rmtree(ckpt, ignore_errors=True)
     return out

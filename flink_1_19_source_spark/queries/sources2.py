@@ -423,7 +423,6 @@ def s_rolling_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..streaming import replay
-    from .streaming_queries import _stream_shuffle_partitions
 
     wd = os.path.join(
         "/tmp/sgraft_streams", os.path.basename(sf_dir.rstrip("/")), "s_rollsink"
@@ -454,8 +453,7 @@ def s_rolling_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch.unpersist()
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, roll, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, roll, checkpoint_dir=ckpt)
 
     def parquet_files(root: str) -> list[str]:
         out = []

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources import jdbc as jdbc_mod
 from ..streaming import replay, retract, sinks
-from .streaming_queries import _events_stream, _stream_shuffle_partitions
+from .streaming_queries import _events_stream
 
 
 @register(
@@ -103,10 +103,9 @@ def s_chained_agg_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     plan = sinks.plan_sink("chained_agg")  # update + keyed_merge (§7.4)
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            level1, fold, checkpoint_dir=ckpt, output_mode=plan.output_mode
-        )
+    replay.run_foreach_batch(
+        level1, fold, checkpoint_dir=ckpt, output_mode=plan.output_mode
+    )
     shutil.rmtree(ckpt, ignore_errors=True)
     return (
         l2.snapshot(spark)
@@ -166,8 +165,7 @@ def s_statement_set_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch.unpersist()
 
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(sdf, fan_out, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fan_out, checkpoint_dir=ckpt)
 
     r1 = spark.read.parquet(p_purch).select(
         F.lit("purchases").alias("sink"),
@@ -262,8 +260,7 @@ def x7b_broadcast_rules_update_stream(spark: SparkSession, sf_dir: str) -> DataF
                 .parquet(os.path.join(out, f"epoch={bid:05d}"))
             )
 
-        with _stream_shuffle_partitions(spark):
-            replay.run_foreach_batch(sdf, fn, checkpoint_dir=ckpt)
+        replay.run_foreach_batch(sdf, fn, checkpoint_dir=ckpt)
 
     publish_rules(1, 0)
     publish_events(e.filter(F.col("event_id") <= mid), "h1")
@@ -315,30 +312,22 @@ def s_crash_resume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", os.path.join(wd, "src"), chunks=4,
         files_per_trigger=1,
     )
-    crashed = {"done": False}
+    crash = replay.CrashPlan(1)
 
     def fn(batch, bid: int) -> None:
         target = os.path.join(out, f"epoch={bid:05d}")
-        if bid == 1 and not crashed["done"]:
-            crashed["done"] = True
+        if crash.fire(bid):
             # torn write: a partial prefix lands, then the "process" dies
             batch.limit(50).select("event_id", "event_type", "value").write.mode(
                 "overwrite"
             ).parquet(target)
-            raise RuntimeError("injected sink crash after partial write")
+            raise RuntimeError("injected crash after partial write")
         batch.select("event_id", "event_type", "value").write.mode(
             "overwrite"
         ).parquet(target)
 
-    with _stream_shuffle_partitions(spark):
-        try:
-            replay.run_foreach_batch(sdf, fn, checkpoint_dir=ckpt)
-            raise AssertionError("crash injection never fired")
-        except Exception as e:
-            if "injected sink crash" not in str(e):
-                raise
-        # restart on the SAME checkpoint: batch 1 replays, torn dir healed
-        replay.run_foreach_batch(sdf, fn, checkpoint_dir=ckpt)
+    # the restart runs on the SAME checkpoint: batch 1 replays, torn dir healed
+    replay.run_foreach_batch(sdf, fn, checkpoint_dir=ckpt, crash=crash)
 
     res = (
         spark.read.parquet(out)
@@ -459,8 +448,7 @@ def s_restart_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        with _stream_shuffle_partitions(spark):
-            replay.run_foreach_batch(sdf, sink, checkpoint_dir=ckpt)
+        replay.run_foreach_batch(sdf, sink, checkpoint_dir=ckpt)
 
     # phase 1: schema v1 (no quality), first event-time half
     v1 = e.filter(F.unix_micros("ts") <= mid)

@@ -22,7 +22,6 @@ from . import streaming_queries as _sq
 from .streaming_queries import (
     _drain_to_memory,
     _events_stream,
-    _stream_shuffle_partitions,
     _ts_literal_df,
     _work_dir,
 )
@@ -386,7 +385,7 @@ def _punctuated_wm_run(
     out = SegmentStore(spark, os.path.join(wd, f"out-{run}"),
                        compact_every=4)
     led_root = os.path.join(wd, f"wmprev-{run}")
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -459,8 +458,7 @@ def _punctuated_wm_run(
                     > F.lit(wm_prev)
                 )
             out.append(closed, batch_id)
-            if crash_once_at == batch_id and crashed["n"] < crash_times:
-                crashed["n"] += 1
+            if crash.fire(batch_id):
                 # worst spot: every store mutated (incl. this batch's
                 # marker and output segment), batch uncommitted
                 raise RuntimeError("injected crash after output append")
@@ -468,15 +466,7 @@ def _punctuated_wm_run(
             batch_df.unpersist()
 
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        for _ in range(crash_times if crash_once_at is not None else 0):
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     res = out.read()
     if res is None:

@@ -25,28 +25,6 @@ from ..tables import load_table
 
 _WORK_ROOT = os.path.join(tempfile.gettempdir(), "sgraft_stream_queries")
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: str | None = None):
-    """State-store partition count is pinned by spark.sql.shuffle.partitions
-    at query start. At replay scale (≤100k events, 8 micro-batches) 32
-    state partitions just multiply per-batch task/Python-worker overhead —
-    the fixed per-batch bill is partitions × state-store instances
-    (load + commit + delta fsync), so the replay harness sizes it DOWN;
-    a real 100 TB stream sizes this up with key cardinality, not down.
-    Override via SPARK_GRAFT_STREAM_SHUFFLE for profiling."""
-    if n is None:
-        n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def _ts_literal_df(spark: SparkSession, val, col: str = "m") -> DataFrame:
     """One-row timestamp-literal DataFrame built JVM-side.  A Python-list
     ``createDataFrame`` is RDD-backed, and WRITING it spawns a Python
@@ -95,19 +73,21 @@ def _drain_to_memory(
     spark: SparkSession, sdf: DataFrame, name: str, mode: str, wd: str,
     partitions: str | None = None,
 ) -> DataFrame:
-    """``partitions`` sizes the state-store partition count for THIS
-    query.  Pure-JVM stateful plans (stream-stream joins, window aggs)
-    pay partitions x state-store-instances of fixed load/commit/fsync
-    per micro-batch and want FEWER at replay scale (4 measured ~20%
-    faster than 8 on the join chains); Python-stateful plans
-    (applyInPandasWithState) want MORE for worker parallelism (8 — the
-    default — measured 2x faster than 2 on the CEP streams)."""
+    """``partitions`` is passed through to `replay.run_available_now`,
+    which pins the state-store partition count for THIS query (default
+    `replay.STATE_PARTITIONS`).  Pure-JVM stateful plans (stream-stream
+    joins, window aggs) pay partitions x state-store-instances of fixed
+    load/commit/fsync per micro-batch and want FEWER at replay scale (4
+    measured ~20% faster than 8 on the join chains); Python-stateful
+    plans (applyInPandasWithState) want MORE for worker parallelism (8 —
+    the default — measured 2x faster than 2 on the CEP streams)."""
     import shutil
     import uuid
 
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark, partitions):
-        replay.run_available_now(sdf, name, output_mode=mode, checkpoint_dir=ckpt)
+    replay.run_available_now(
+        sdf, name, output_mode=mode, checkpoint_dir=ckpt, partitions=partitions
+    )
     out = spark.table(name)
     shutil.rmtree(ckpt, ignore_errors=True)
     return out
@@ -314,13 +294,12 @@ def s_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     plan = sinks.plan_sink("topn")  # update + keyed_merge (§7.4)
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            topn.streaming_topn(sdf, n=3),
-            merge_batch,
-            checkpoint_dir=ckpt,
-            output_mode=plan.output_mode,
-        )
+    replay.run_foreach_batch(
+        topn.streaming_topn(sdf, n=3),
+        merge_batch,
+        checkpoint_dir=ckpt,
+        output_mode=plan.output_mode,
+    )
     shutil.rmtree(ckpt, ignore_errors=True)
     return tgt.scan(spark).select("event_type", "event_id", "value", "rank")
 
@@ -351,11 +330,10 @@ def s_keep_last_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(wd, f"merge-{uuid.uuid4().hex[:8]}")
     sink = sinks.ParquetMergeSink(spark, state, pk_cols=["user_id"])
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            topn.streaming_keep_last(sdf), sink, checkpoint_dir=ckpt,
-            output_mode=sinks.plan_sink("dedup_keep_last").output_mode,
-        )
+    replay.run_foreach_batch(
+        topn.streaming_keep_last(sdf), sink, checkpoint_dir=ckpt,
+        output_mode=sinks.plan_sink("dedup_keep_last").output_mode,
+    )
     out = sink.snapshot_df().select("user_id", "event_id").localCheckpoint()
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(state, ignore_errors=True)
@@ -510,11 +488,10 @@ def s_broadcast_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = sinks.ParquetMergeSink(spark, state, pk_cols=["event_type", "segment"])
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
     try:
-        with _stream_shuffle_partitions(spark):
-            replay.run_foreach_batch(
-                joined, sink, checkpoint_dir=ckpt,
-                output_mode=sinks.plan_sink("global_agg").output_mode,
-            )
+        replay.run_foreach_batch(
+            joined, sink, checkpoint_dir=ckpt,
+            output_mode=sinks.plan_sink("global_agg").output_mode,
+        )
     finally:
         dim.unpersist()
     out = sink.snapshot_df().select("event_type", "segment", "n").localCheckpoint()
@@ -574,11 +551,10 @@ def s_late_data_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir=os.path.join(wd, f"wm-{run_id}"),
     )
     ckpt = os.path.join(wd, f"ckpt-{run_id}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            sdf, cap, checkpoint_dir=ckpt,
-            output_mode=sinks.plan_sink("late_side_output").output_mode,
-        )
+    replay.run_foreach_batch(
+        sdf, cap, checkpoint_dir=ckpt,
+        output_mode=sinks.plan_sink("late_side_output").output_mode,
+    )
     out = spark.read.parquet(late_dir).localCheckpoint()
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(late_dir, ignore_errors=True)
@@ -640,11 +616,10 @@ def s_allowed_lateness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by=["user_id", "ts", "event_id"],
     )
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            sdf, op, checkpoint_dir=ckpt,
-            output_mode=sinks.plan_sink("windowed_agg").output_mode,
-        )
+    replay.run_foreach_batch(
+        sdf, op, checkpoint_dir=ckpt,
+        output_mode=sinks.plan_sink("windowed_agg").output_mode,
+    )
     out = op.result_df().localCheckpoint(eager=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -860,9 +835,8 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     plan = sinks.plan_sink("cdc_apply")  # update + keyed_merge (§7.4)
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            changelog, apply_cdc, checkpoint_dir=ckpt, output_mode=plan.output_mode
-        )
+    replay.run_foreach_batch(
+        changelog, apply_cdc, checkpoint_dir=ckpt, output_mode=plan.output_mode
+    )
     shutil.rmtree(ckpt, ignore_errors=True)
     return tgt.scan(spark).select("user_id", "event_id", "value")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources import jdbc as jdbc_mod
 from ..streaming import replay, retract, sinks
-from .streaming_queries import _events_stream, _stream_shuffle_partitions
+from .streaming_queries import _events_stream
 
 # --------------------------------------------------------------------------
 # §7.4-retract — retractable Top-N over a streaming aggregate's changelog
@@ -107,7 +107,7 @@ def _topn_retract_run(
         spark.createDataFrame([], "user_id long, cnt long"), overwrite=True
     )
     ledger.init(spark)
-    crashed = {"done": False}
+    crash = replay.CrashPlan(crash_once_at)
     rank_w = Window.orderBy(F.col("cnt").desc(), F.col("user_id"))
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -140,8 +140,7 @@ def _topn_retract_run(
             mirror.upsert(
                 batch_df.select("user_id", "cnt"), pk_cols=["user_id"]
             )
-            if crash_once_at == batch_id and not crashed["done"]:
-                crashed["done"] = True
+            if crash.fire(batch_id):
                 # worst spot: every state table mutated, ledger unmarked
                 raise RuntimeError("injected crash before ledger mark")
             ledger.mark(spark, batch_id)
@@ -150,20 +149,10 @@ def _topn_retract_run(
 
     plan = sinks.plan_sink("chained_agg")  # update + keyed_merge (§7.4)
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        if crash_once_at is not None:
-            try:
-                replay.run_foreach_batch(
-                    level1, fold, checkpoint_dir=ckpt,
-                    output_mode=plan.output_mode,
-                )
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(
-            level1, fold, checkpoint_dir=ckpt, output_mode=plan.output_mode
-        )
+    replay.run_foreach_batch(
+        level1, fold, checkpoint_dir=ckpt, output_mode=plan.output_mode,
+        crash=crash,
+    )
     shutil.rmtree(ckpt, ignore_errors=True)
     return (
         state.scan(spark)
@@ -258,7 +247,7 @@ def _join_retract_run(
     log = SegmentStore(
         spark, os.path.join(wd, f"evlog-{run}"), compact_every=2
     )
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if ledger.seen(spark, batch_id):
@@ -287,8 +276,7 @@ def _join_retract_run(
                 "event_id", "user_id", "cnt"
             )
             out.upsert(joined, pk_cols=["event_id"])
-            if crash_once_at == batch_id and crashed["n"] < crash_times:
-                crashed["n"] += 1
+            if crash.fire(batch_id):
                 # worst spot: sink mutated, mirror/ledger uncommitted
                 raise RuntimeError("injected crash before ledger mark")
             mirror.upsert(upserts, pk_cols=["user_id"])
@@ -297,15 +285,7 @@ def _join_retract_run(
             batch_df.unpersist()
 
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        for _ in range(crash_times if crash_once_at is not None else 0):
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt, crash=crash)
     shutil.rmtree(ckpt, ignore_errors=True)
     return out.scan(spark).select("event_id", "user_id", "cnt")
 
@@ -390,7 +370,7 @@ def _outer_join_retract_run(
     ledger.init(spark)
     llog = SegmentStore(spark, os.path.join(wd, f"vlog-{run}"), compact_every=2)
     rlog = SegmentStore(spark, os.path.join(wd, f"plog-{run}"), compact_every=2)
-    crashed = {"n": 0}
+    crash = replay.CrashPlan(crash_once_at, crash_times)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if ledger.seen(spark, batch_id):
@@ -493,8 +473,7 @@ def _outer_join_retract_run(
                 pk_cols=["view_id", "b_key"],
                 op_col="op",
             )
-            if crash_once_at == batch_id and crashed["n"] < crash_times:
-                crashed["n"] += 1
+            if crash.fire(batch_id):
                 # worst spot: sink mutated, ledger uncommitted
                 raise RuntimeError("injected crash before ledger mark")
             ledger.mark(spark, batch_id)
@@ -502,19 +481,17 @@ def _outer_join_retract_run(
             batch_df.unpersist()
 
     ckpt = os.path.join(wd, f"ckpt-{run}")
-    with _stream_shuffle_partitions(spark):
-        n_crashes = crash_times if crash_once_at is not None else 0
-        for attempt in range(n_crashes):
-            try:
-                replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
-                raise AssertionError("crash injection never fired")
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-            # restart-from-scratch resume: a fresh checkpoint each time
-            shutil.rmtree(ckpt, ignore_errors=True)
-            ckpt = os.path.join(wd, f"ckpt-{run}-resume{attempt}")
-        replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+    for attempt in range(crash.times):
+        try:
+            replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
+            raise AssertionError("crash injection never fired")
+        except Exception as e:
+            if "injected crash" not in str(e):
+                raise
+        # restart-from-scratch resume: a fresh checkpoint each time
+        shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt = os.path.join(wd, f"ckpt-{run}-resume{attempt}")
+    replay.run_foreach_batch(sdf, fold, checkpoint_dir=ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     return out.scan(spark).select(
         "view_id",

@@ -33,11 +33,7 @@ from ..functions.exact import dsum, sql_dsum
 from ..registry import register
 from ..streaming import sinks
 from ..tables import load_table
-from .streaming_queries import (
-    _drain_to_memory,
-    _events_stream,
-    _stream_shuffle_partitions,
-)
+from .streaming_queries import _drain_to_memory, _events_stream
 
 
 @register(
@@ -238,15 +234,10 @@ def s_window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    # size the state store like every other replayed stream (r13): this
-    # drain ran at the SESSION's shuffle-partition count (32 in the
-    # bench) — 4x the state-store instances, hence 4x the per-batch
-    # load/commit/fsync bill, of the 8 the replay harness pins
-    with _stream_shuffle_partitions(spark):
-        replay.run_foreach_batch(
-            hourly, rank_batch, checkpoint_dir=ckpt,
-            output_mode=sinks.plan_sink("windowed_agg").output_mode,
-        )
+    replay.run_foreach_batch(
+        hourly, rank_batch, checkpoint_dir=ckpt,
+        output_mode=sinks.plan_sink("windowed_agg").output_mode,
+    )
     shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir)
 

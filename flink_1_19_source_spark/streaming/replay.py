@@ -10,16 +10,42 @@ batch twin's answer — that equivalence is the streaming test oracle.
 Flink parity: this emulates a bounded Kafka-like source with in-order
 partitions (upstream: flink-connector-files streaming mode; per-split
 watermarks).
+
+Drain contract. `run_available_now` and `run_foreach_batch` are the only
+way a replayed stream is drained, and they own two decisions:
+
+* State-partition pin. The state-store partition count is fixed by
+  ``spark.sql.shuffle.partitions`` when a query first starts on a
+  checkpoint. At replay scale (≤100k events, a few micro-batches) 32
+  state partitions just multiply per-batch task and Python-worker
+  overhead: the fixed per-batch bill is partitions × state-store
+  instances (load + commit + changelog fsync). So both drains pin the
+  conf to `STATE_PARTITIONS` for the duration of the drain (the fold
+  runs inside it too) and restore the session's value afterwards. A real
+  100 TB stream sizes this up with key cardinality, not down.
+  `run_available_now` takes a per-query override (pure-JVM join chains
+  drain faster at 4).
+* Crash restarts. Flink's exactly-once restore contract (checkpoint →
+  crash → restart → same answer) is pinned by crash injection. The fold
+  asks a `CrashPlan` whether to die at this batch (``crash.fire(bid)``)
+  and raises ``RuntimeError("injected crash …")`` at its own crash site.
+  `run_foreach_batch(..., crash=plan)` runs ``plan.times`` attempts that
+  must each end in that error, restarting on the SAME checkpoint, then
+  the clean drain. An attempt that finishes without the crash raises
+  ``AssertionError("crash injection never fired")``; any other error
+  propagates.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -81,23 +107,63 @@ def read_stream(
     )
 
 
+#: State-store partitions of every replayed drain (see the module docstring).
+STATE_PARTITIONS = 8
+
+#: The marker every injected crash carries in its message.
+_CRASH_MARKER = "injected crash"
+
+
+@contextmanager
+def _pin_state_partitions(spark: SparkSession, n):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+class CrashPlan:
+    """Fire-once (or fire-`times`) crash injection for a replayed fold:
+    `fire(batch_id)` is True the first `times` times the fold reaches
+    batch `at`, False otherwise (always False when `at` is None)."""
+
+    def __init__(self, at: int | None, times: int = 1):
+        self.at = at
+        self.times = times if at is not None else 0
+        self.fired = 0
+
+    def fire(self, batch_id) -> bool:
+        if int(batch_id) != self.at or self.fired >= self.times:
+            return False
+        self.fired += 1
+        return True
+
+
+def _start(writer, checkpoint_dir: str | None) -> None:
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.start().awaitTermination()
+
+
 def run_available_now(
     sdf: DataFrame,
     query_name: str,
     output_mode: str = "append",
     checkpoint_dir: str | None = None,
+    partitions: str | int | None = None,
 ) -> None:
-    """Drain the whole replay through the query into a memory sink."""
+    """Drain the whole replay through the query into a memory sink, at
+    `partitions` state partitions (default `STATE_PARTITIONS`)."""
     w = (
         sdf.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.awaitTermination()
+    with _pin_state_partitions(sdf.sparkSession, partitions or STATE_PARTITIONS):
+        _start(w, checkpoint_dir)
 
 
 def run_foreach_batch(
@@ -105,16 +171,29 @@ def run_foreach_batch(
     fn,
     checkpoint_dir: str | None = None,
     output_mode: str = "append",
+    crash: CrashPlan | None = None,
 ) -> None:
-    w = (
-        sdf.writeStream.foreachBatch(fn)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.awaitTermination()
+    """Drain the whole replay through `fn(batch, batch_id)`. With a
+    `crash` plan, first run `crash.times` attempts that must each die on
+    the injected crash, every restart on the same checkpoint."""
+
+    def writer():
+        return (
+            sdf.writeStream.foreachBatch(fn)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+        )
+
+    with _pin_state_partitions(sdf.sparkSession, STATE_PARTITIONS):
+        for _ in range(crash.times if crash is not None else 0):
+            try:
+                _start(writer(), checkpoint_dir)
+            except StreamingQueryException as e:
+                if _CRASH_MARKER not in str(e):
+                    raise
+            else:
+                raise AssertionError("crash injection never fired")
+        _start(writer(), checkpoint_dir)
 
 
 def replay_table(

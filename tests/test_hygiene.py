@@ -68,3 +68,18 @@ def test_no_internal_tooling_references():
                 if pat.search(line):
                     hits.append(f"{rel}:{i}: {line.strip()[:120]}")
     assert not hits, "internal-tooling references found:\n" + "\n".join(hits)
+
+
+def test_state_partition_pin_has_one_home():
+    """The state-store partition count of replayed streams is pinned in
+    `streaming/replay.py` alone; no query module sets the shuffle-partition
+    conf itself."""
+    key = "spark.sql.shuffle.partitions"
+    queries = REPO / "flink_1_19_source_spark" / "queries"
+    hits = [
+        f"{p.relative_to(REPO)}:{i}: {line.strip()[:120]}"
+        for p in sorted(queries.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if key in line
+    ]
+    assert not hits, f"{key} named under queries/:\n" + "\n".join(hits)

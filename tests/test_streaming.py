@@ -854,3 +854,99 @@ def test_tumble_restart_with_changelog_checkpointing(spark, sf_dir, tmp_path):
     ]
     assert changelogs, sorted(os.listdir(state))
     _assert_tumble_matches_batch(spark, sf_dir, spark.read.parquet(out))
+
+
+def _small_replay(spark, sf_dir, tmp_path, chunks):
+    """`chunks` one-file micro-batches of the events table."""
+    return replay.replay_table(
+        spark, sf_dir, "events", str(tmp_path / "src"), chunks=chunks
+    )
+
+
+def test_crash_plan_never_reached_fails_the_drain(spark, sf_dir, tmp_path):
+    """A crash plan whose batch the replay never reaches is a vacuous
+    restart test: the drain must say so instead of passing."""
+    crash = replay.CrashPlan(at=99)
+
+    def fold(batch, bid):
+        if crash.fire(bid):
+            raise RuntimeError("injected crash")
+
+    with pytest.raises(AssertionError, match="crash injection never fired"):
+        replay.run_foreach_batch(
+            _small_replay(spark, sf_dir, tmp_path, 2), fold,
+            checkpoint_dir=str(tmp_path / "ckpt"), crash=crash,
+        )
+    assert crash.fired == 0
+
+
+def test_drain_propagates_other_errors_and_restores_conf(spark, sf_dir, tmp_path):
+    """A fold error that is not an injected crash is not swallowed as
+    one (the fold fails once, so a swallowed error would let the restart
+    pass), and the drain's state-partition pin is undone on the way out."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    failed = []
+    try:
+
+        def fold(batch, bid):
+            if not failed:
+                failed.append(bid)
+                raise ValueError("fold bug, not a crash")
+
+        with pytest.raises(Exception, match="fold bug, not a crash") as err:
+            replay.run_foreach_batch(
+                _small_replay(spark, sf_dir, tmp_path, 2), fold,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+                crash=replay.CrashPlan(at=1),
+            )
+        assert not isinstance(err.value, AssertionError)
+        assert spark.conf.get(key) == "16"
+    finally:
+        spark.conf.set(key, session_value)
+
+
+def test_drain_restarts_on_same_checkpoint_at_pinned_partitions(
+    spark, sf_dir, tmp_path
+):
+    """`times=2` kills the fold twice at batch `at`; both restarts resume
+    from the same checkpoint, so the fold sees that batch three times and
+    the sink ends equal to a clean run's. The state store has
+    `STATE_PARTITIONS` partitions whatever the session conf says."""
+    import os
+
+    key = "spark.sql.shuffle.partitions"
+    agg = _small_replay(spark, sf_dir, tmp_path, 3).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"), F.max("event_id").alias("last_id")
+    )
+
+    def drain(ckpt, crash=None):
+        sink = sinks.UpsertSink(pk_cols=["event_type"])
+        seen = []
+
+        def fold(batch, bid):
+            seen.append(bid)
+            if crash is not None and crash.fire(bid):
+                raise RuntimeError("injected crash before the sink write")
+            sink(batch, bid)
+
+        replay.run_foreach_batch(
+            agg, fold, checkpoint_dir=ckpt, output_mode="update", crash=crash
+        )
+        return sorted(map(str, sink.snapshot())), seen
+
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        ckpt = str(tmp_path / "ckpt_crash")
+        got, seen = drain(ckpt, replay.CrashPlan(at=1, times=2))
+        assert spark.conf.get(key) == "16"
+    finally:
+        spark.conf.set(key, session_value)
+    assert seen.count(1) == 3, seen
+    want, _ = drain(str(tmp_path / "ckpt_clean"))
+    assert got == want
+    state = os.path.join(ckpt, "state", "0")
+    parts = sorted(int(p) for p in os.listdir(state) if p.isdigit())
+    assert parts == list(range(replay.STATE_PARTITIONS)), parts

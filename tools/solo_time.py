@@ -7,11 +7,12 @@ tracker for a job group set around each run, so per-job-overhead
 changes can be checked one query at a time.
 
 Usage:
-    python tools/solo_time.py [-nN] name [name ...]
+    python tools/solo_time.py [-n N] name [name ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -20,13 +21,31 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 
+def _positive_int(text: str) -> int:
+    try:
+        n = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an integer: {text!r}")
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1: {n}")
+    return n
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Median wall time and Spark job count per query."
+    )
+    ap.add_argument(
+        "-n", dest="runs", type=_positive_int, default=3,
+        help="runs per query (default 3); -n5 and -n 5 both work",
+    )
+    ap.add_argument("names", nargs="+", help="registered query names")
+    return ap.parse_args(argv)
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 3
-    if args and args[0].startswith("-n"):
-        runs = int(args[0][2:])
-        args = args[1:]
-    names = args
+    args = parse_args()
+    runs, names = args.runs, args.names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from flink_1_19_source_spark.registry import queries
