@@ -34,6 +34,14 @@ def dsum(col: Column) -> Column:
     return F.sum(_dec(col)).cast("double")
 
 
+def dsum_round(col: Column, digits: int) -> Column:
+    """Exact SUM rounded (half up) to ``digits`` decimals *before* the cast
+    to double. Rounding the double instead splits engines on a tie: the
+    double nearest 2142838.445 lies just below it, and Spark rounds its
+    decimal text half up (.45) while DuckDB rounds its binary value (.44)."""
+    return F.round(F.sum(_dec(col)), digits).cast("double")
+
+
 def davg(col: Column) -> Column:
     """Exact AVG: exact decimal sum / count, one final double division."""
     return (F.sum(_dec(col)).cast("double") / F.count(col)).cast("double")
@@ -64,6 +72,10 @@ def sql_dec(expr: str) -> str:
 
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM({sql_dec(expr)}) AS DOUBLE)"
+
+
+def sql_dsum_round(expr: str, digits: int) -> str:
+    return f"CAST(ROUND(SUM({sql_dec(expr)}), {digits}) AS DOUBLE)"
 
 
 def sql_davg(expr: str) -> str:

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum
+from ..functions.exact import dsum_round, sql_dsum_round
 from ..operators import skew
 from ..operators import text_analysis as ta
 from ..registry import register
@@ -68,9 +68,9 @@ def n4_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))) AS DOUBLE), 2) AS revenue,
+           {sql_dsum_round('l_extendedprice * (1 - l_discount)', 2)} AS revenue,
            CAST(o_orderdate AS VARCHAR) AS o_orderdate
     FROM customer
     JOIN orders ON c_custkey = o_custkey
@@ -102,7 +102,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.round(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+            dsum_round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias(
                 "revenue"
             )
         )
@@ -116,8 +116,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
-    oracle="""
-    SELECT n_name, ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,6))) AS DOUBLE), 2) AS revenue
+    oracle=f"""
+    SELECT n_name, {sql_dsum_round('l_extendedprice * (1 - l_discount)', 2)} AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -154,8 +154,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(
-            F.round(
-                dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            dsum_round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), 2
             ).alias("revenue")
         )
     )

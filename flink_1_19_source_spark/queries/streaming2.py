@@ -214,8 +214,6 @@ def x7b_broadcast_rules_update_stream(spark: SparkSession, sf_dir: str) -> DataF
     rules table between drains IS the control-stream update; the output
     carries the rules version that actually enriched each row, which the
     oracle pins per half."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     wd = os.path.join(
         "/tmp/sgraft_streams", os.path.basename(sf_dir.rstrip("/")), "x7b"
     )
@@ -380,8 +378,8 @@ def s_restart_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     users last seen before the upgrade carry NULL quality and users
     touched after carry the real value — exactly Flink's state-schema
     evolution contract for a savepoint upgrade.  The oracle is the batch
-    keep-last with the same epoch-split quality derivation."""
-    from ..streaming.topn import streaming_keep_last  # noqa: F401 (doc xref)
+    keep-last with the same epoch-split quality derivation.  (Keep-last
+    itself is the contract of ``streaming.topn.streaming_keep_last``.)"""
     from ..tables import load_table
 
     wd = os.path.join(

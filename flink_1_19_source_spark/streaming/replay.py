@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..tables import parquet_schema
+
 
 def split_into_chunks(
     src_parquet: str,
@@ -221,6 +223,8 @@ def replay_table(
     chunk_dir = os.path.join(work_dir, f"{name}_chunks{chunks}_{src_tag}")
     if not os.path.isdir(chunk_dir) or not os.listdir(chunk_dir):
         split_into_chunks(src, chunk_dir, ts_col, chunks, order_by=order_by)
-    # schema from a batch read of the chunks (ts already µs there)
-    schema = spark.read.parquet(chunk_dir).schema
+    # every chunk is a slice of one Arrow table (ts already µs there), so
+    # the first chunk's cached schema is the stream's
+    first = os.path.join(chunk_dir, min(os.listdir(chunk_dir)))
+    schema = parquet_schema(spark, first)
     return read_stream(spark, chunk_dir, schema, files_per_trigger)

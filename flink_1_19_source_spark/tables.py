@@ -5,14 +5,31 @@ INTERVAL 'x'``, ``PRIMARY KEY ... NOT ENFORCED``) that Spark keeps outside
 the schema. This registry carries that metadata so batch queries, streaming
 replays and sinks agree on event-time columns, watermark delays and upsert
 keys. (SURVEY.md §1.2/§7.2; upstream: flink-table DDL + catalog.)
+
+Schemas are resolved once, like a catalog's ``CREATE TABLE``: planning a
+scan does not re-open the data file. A bare ``spark.read.parquet(path)``
+runs one Spark job to read a footer and infer the schema on every call,
+so ``parquet_schema`` caches Spark's own inferred ``StructType`` and
+``load_table`` hands it to ``spark.read.schema(...)``. The cache key is the
+file's identity (real path, inode, size, ``st_mtime_ns``, ``st_ctime_ns``)
+plus the session's value of every conf that changes how Parquet types map
+to Spark types (``_PARQUET_TYPE_CONFS``), so a rewritten file or a changed
+conf is a miss. Schemas are cached, not DataFrames: two scans of one table
+must stay distinct plans, or a self-join of two ``load_table`` results
+would have ambiguous columns.
 """
 
 from __future__ import annotations
 
+import copy
 import os
-from dataclasses import dataclass, field
+import stat
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -89,10 +106,62 @@ def _events_ts_kind(path: str) -> str:
     return "other"
 
 
+#: Session confs read by Spark's Parquet-to-Spark schema converter
+#: (``ParquetToSparkSchemaConverter`` in Spark 4.1): each one can change the
+#: inferred type of a column, so each is part of the schema cache key.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+_SCHEMA_CACHE_MAX = 256
+_schema_cache: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's inferred schema of the Parquet file at ``path``, inferred
+    once per file version and conf setting (see the module docstring).
+
+    A miss runs ``spark.read.parquet(path).schema`` itself, so the types
+    are exactly Spark's. A path that is not a regular file (a directory of
+    part files) is inferred on every call and not cached. ctime is in the
+    key besides mtime because writers may pin mtime (the replay chunks do).
+    Callers get a copy: ``StructType.add`` mutates in place."""
+    st = os.stat(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns,
+        st.st_ctime_ns,
+        tuple(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
+    )
+    with _schema_lock:
+        schema = _schema_cache.get(key)
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _schema_lock:
+            _schema_cache[key] = schema
+            if len(_schema_cache) > _SCHEMA_CACHE_MAX:
+                _schema_cache.popitem(last=False)
+    return copy.deepcopy(schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Plain ``spark.read.parquet`` so Catalyst keeps full
-    pushdown freedom (column pruning, predicate pushdown, partition pruning
-    on real partitioned layouts).
+    """Scan one table with its schema from ``parquet_schema``: after the
+    first scan of a file version no Spark job re-reads its footer. The
+    read is still a plain Parquet scan, so Catalyst keeps full pushdown
+    freedom (column pruning, predicate pushdown, partition pruning on real
+    partitioned layouts). Every call returns a new DataFrame.
 
     ``events.ts`` is normalized to µs-precision ``TimestampType`` (UTC
     session tz) whatever the file stores:
@@ -113,17 +182,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         kind = _events_ts_kind(path)
         if kind in ("int64_ns", "ts_ns"):
-            # only this branch needs the legacy conf (runtime-settable)
+            # only this branch needs the legacy conf (runtime-settable);
+            # set before the schema lookup, whose key includes it
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
+            df = _scan(spark, path)
             return df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
-        df = spark.read.parquet(path)
+        df = _scan(spark, path)
         if kind == "ts_ntz":
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _scan(spark, path)
+
+
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
