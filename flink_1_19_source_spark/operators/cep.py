@@ -2,20 +2,44 @@
 sequences (SURVEY §2.9 X5; Flink CEP / SQL MATCH_RECOGNIZE, upstream
 flink-libraries/flink-cep + flink-table-planner MatchRecognize nodes).
 
-Batch semantics implemented here; the contiguous-pattern subset:
+Events are grouped by key and ordered by (ts, id); each row is
+classified to a single-character symbol, and a Python regex engine (a
+compiled NFA — the same machinery Flink's CEP NFA implements in Java)
+scans the per-key symbol string.  Pattern variables are named groups
+(SKIP TO, SUBSET) and ``{- sub -}`` sections are row-pattern
+exclusions.
 
-- events are grouped by key and ordered by (ts, id);
-- each row is classified to a single-character symbol;
-- a Python regex engine (a compiled NFA — the same machinery Flink's CEP
-  NFA implements in Java) scans the per-key symbol string left-to-right,
-  non-overlapping — equivalent to MATCH_RECOGNIZE's default
-  AFTER MATCH SKIP PAST LAST ROW;
-- each match is emitted with its row span mapped back to event ids.
+This module is the single home of the regex CEP semantics for batch AND
+streaming, the way Flink runs one NFA with one ``AfterMatchSkipStrategy``
+for bounded and unbounded input:
 
-Scale shape: one shuffle on the key (applyInPandas group-map); per-key
-work is linear in sequence length. Keys are independent — 1000 executors
-each match their own key ranges. The streaming twin (incremental NFA in
-keyed state) is streaming/cep_stream.py.
+- ``_scan`` is the one match loop: it yields every match with its
+  span, its included (non-excluded) row positions and the position the
+  AFTER MATCH SKIP policy resumes at — PAST LAST ROW, TO NEXT ROW or
+  SKIP TO <variable>;
+- ``key_matcher`` builds the per-key function on top of it:
+  ``(key, syms, ids, tss_us, match_no) -> (rows, match_no, cut)`` with
+  the MEASURES of one output row per match and ``cut`` = the last
+  match's resume position (0 if there was none);
+- the output schemas (``MATCH_SCHEMA``, ``SKIP_SCHEMA``,
+  ``SKIP_TO_SCHEMA``, ``EXCL_SCHEMA``, ``ITER_SCHEMA``) live here and
+  are the streaming twins' schemas too.
+
+Batch operators run the per-key function once over each key's complete
+sequence (``_scan_by_key``: one shuffle on the key, a partition-local
+sort, linear per-key work; keys are independent, so 1000 executors each
+match their own key ranges).  The streaming twin
+(streaming/cep_stream.py) runs the SAME function over each key's
+buffered undecided suffix per micro-batch and keeps only the residue
+from ``cut`` (advanced to the first possible match-start symbol, capped
+at ``max_buffer``).  Rows before ``cut`` can never start a later match
+(the scan resumes there), and every match starts with a start symbol,
+so the residue scan resumes exactly where the one-shot scan does.  The
+carry is exact for prefix-stable patterns — a match found in a prefix
+is the match of every longer sequence — which holds when the pattern's
+last variable is a single unquantified row that no earlier variable can
+absorb (``AB+C``, ``S[CP]*?P``); a greedy trailing quantifier (``S[CP]*P``)
+is decidable only at the run boundary and stays batch-only.
 """
 
 from __future__ import annotations
@@ -23,6 +47,7 @@ from __future__ import annotations
 import re
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -37,58 +62,268 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+_HEAD = [
+    StructField("key", LongType()),
+    StructField("match_no", LongType()),
+    StructField("start_id", LongType()),
+    StructField("end_id", LongType()),
+    StructField("n_rows", LongType()),
+]
+_SPAN_TS = [
+    StructField("first_ts", TimestampType()),
+    StructField("last_ts", TimestampType()),
+]
+
 MATCH_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
+    _HEAD
+    + [
         StructField("start_ts", TimestampType()),
         StructField("end_ts", TimestampType()),
     ]
 )
 
+SKIP_SCHEMA = StructType(
+    _HEAD + [StructField("b_rows", LongType())] + _SPAN_TS
+)
+
+SKIP_SCHEMA_BOTH = StructType(
+    [StructField("skip_mode", StringType())] + list(SKIP_SCHEMA.fields)
+)
+
+SKIP_TO_SCHEMA = StructType(
+    _HEAD
+    + [StructField("s_rows", LongType())]
+    + _SPAN_TS
+    + [
+        StructField("s_first_ts", TimestampType()),
+        StructField("s_last_ts", TimestampType()),
+    ]
+)
+
+EXCL_SCHEMA = StructType(
+    _HEAD + [StructField("excl_rows", LongType())] + _SPAN_TS
+)
+
+
+# ---------------------------------------------------------------------------
+# The regex CEP kernel (shared with streaming/cep_stream.py)
+# ---------------------------------------------------------------------------
+
+_EXCL_SECTION = re.compile(r"\{-\s*(.*?)\s*-\}")
+
+
+def compile_exclusions(pattern: str) -> tuple["re.Pattern", list[str]]:
+    """Translate row-pattern exclusion syntax ``{- sub -}`` into named
+    groups so the matched-but-excluded spans can be subtracted from the
+    measures.  Returns (compiled regex, exclusion group names); a
+    pattern without exclusions compiles unchanged with no names.
+
+    Documented limitation: an exclusion nested under an OUTER quantifier
+    keeps only its final iteration's span (regex group semantics); the
+    supported surface is exclusions at pattern top level — every shape
+    the SQL:2016 examples and Flink's MATCH_RECOGNIZE docs show."""
+    names: list[str] = []
+
+    def repl(m: "re.Match") -> str:
+        name = f"xcl{len(names)}"
+        names.append(name)
+        return f"(?P<{name}>{m.group(1)})"
+
+    return re.compile(_EXCL_SECTION.sub(repl, pattern)), names
+
+
+def subset_measures(
+    m: "re.Match", subset_groups: tuple[str, ...]
+) -> tuple[int, int | None, int | None]:
+    """SUBSET union measures from a match's named-group spans:
+    (COUNT(S.*), index of FIRST(S) row, index of LAST(S) row)."""
+    spans = [
+        (m.start(g), m.end(g))
+        for g in subset_groups
+        if m.start(g) != -1 and m.end(g) > m.start(g)
+    ]
+    s_rows = sum(e - st for st, e in spans)
+    s_first = min(st for st, _ in spans) if spans else None
+    s_last = max(e for _, e in spans) - 1 if spans else None
+    return s_rows, s_first, s_last
+
+
+def skip_to_resume(m: "re.Match", resume_group: str) -> int:
+    """AFTER MATCH SKIP TO <variable> resume position (inclusive), with
+    Flink's cannot-advance guard: a target at or before the match start
+    (including a variable that did not participate) raises."""
+    resume = m.start(resume_group)
+    if resume <= m.start():
+        raise ValueError(
+            f"AFTER MATCH SKIP TO {resume_group} cannot advance "
+            f"past the match start (Flink raises here too)"
+        )
+    return resume
+
+
+# AFTER MATCH SKIP policies: match → resume position.  PAST LAST ROW
+# never lets matches overlap (an empty match still advances one row);
+# TO NEXT ROW resumes at the row after the match's FIRST row.
+_SKIP = {
+    "past_last_row": lambda m: max(m.start() + 1, m.end()),
+    "to_next_row": lambda m: m.start() + 1,
+}
+
+
+def _scan(compiled: "re.Pattern", names: list[str], resume, s: str):
+    """The regex match loop: scan ``s`` left to right and yield
+    ``(match, start, end_inclusive, included_positions, resume)`` per
+    match, with the exclusion groups ``names`` subtracted from the
+    included positions and the next search starting at ``resume(m)``."""
+    pos = 0
+    while pos <= len(s):  # search() clamps pos > len(s) back to len(s)
+        m = compiled.search(s, pos)
+        if m is None:
+            return
+        a, end = m.span()
+        spans = [m.span(n) for n in names if m.start(n) != -1]
+        inc = (
+            [i for i in range(a, end)
+             if not any(lo <= i < hi for lo, hi in spans)]
+            if spans else range(a, end)
+        )
+        pos = resume(m)
+        yield m, a, end - 1, inc, pos
+
+
+def exclusion_matches(
+    compiled: "re.Pattern", names: list[str], s: str
+) -> list[tuple[int, int, list[int]]]:
+    """AFTER MATCH SKIP PAST LAST ROW scan: per match
+    (start, end_inclusive, included_positions) with the excluded
+    groups' spans subtracted."""
+    return [
+        (a, b, list(inc))
+        for _, a, b, inc, _ in _scan(compiled, names, _SKIP["past_last_row"], s)
+    ]
+
+
+def key_matcher(
+    pattern: str,
+    skip: str = "past_last_row",
+    *,
+    resume_group: str | None = None,
+    count_syms: tuple[str, ...] = (),
+    subset_groups: tuple[str, ...] | None = None,
+    excl_rows: bool = False,
+):
+    """The per-key MATCH_RECOGNIZE function every regex operator runs,
+    batch and streaming: ``fn(key, syms, ids, tss_us, match_no) ->
+    (rows, match_no, cut)``.
+
+    ``syms`` is the key's (ts, id)-ordered symbol string with aligned
+    row ``ids`` and epoch-µs ``tss_us``; ``match_no`` is the number of
+    matches already emitted for the key.  AFTER MATCH SKIP is ``skip``
+    (``past_last_row`` / ``to_next_row``) or, with ``resume_group``,
+    SKIP TO that variable.  One row per match with included rows:
+    ``key, match_no, start_id, end_id, n_rows``, then COUNT(s.*) per
+    ``count_syms``, ``excl_rows`` (matched rows the exclusions removed)
+    if asked, the SUBSET COUNT if ``subset_groups`` is given, the
+    FIRST/LAST ts of the included rows, and the SUBSET's FIRST/LAST ts.
+    A match whose rows are all excluded emits nothing but still
+    consumes its span.  ``cut`` is the last match's resume position (0
+    if there was none): no row before it can start a later match."""
+    if resume_group is not None:
+        def resume(m):
+            return skip_to_resume(m, resume_group)
+    elif skip in _SKIP:
+        resume = _SKIP[skip]
+    else:
+        raise ValueError(f"unknown AFTER MATCH SKIP mode: {skip}")
+    compiled, names = compile_exclusions(pattern)
+
+    def fn(key, syms, ids, tss, match_no):
+        rows, cut = [], 0
+        # the loop leaves cut at the last match's resume position
+        for m, a, b, inc, cut in _scan(compiled, names, resume, syms):
+            if not inc:
+                continue
+            match_no += 1
+            row = [key, match_no, ids[inc[0]], ids[inc[-1]], len(inc)]
+            row += [syms.count(c, a, b + 1) for c in count_syms]
+            if excl_rows:
+                row.append(b + 1 - a - len(inc))
+            if subset_groups is None:
+                row += [tss[inc[0]], tss[inc[-1]]]
+            else:
+                s_rows, s_first, s_last = subset_measures(m, subset_groups)
+                row += [
+                    s_rows, tss[inc[0]], tss[inc[-1]],
+                    None if s_first is None else tss[s_first],
+                    None if s_last is None else tss[s_last],
+                ]
+            rows.append(tuple(row))
+        return rows, match_no, cut
+
+    return fn
+
+
+def epoch_us(ts: pd.Series) -> list[int]:
+    """A timestamp column as epoch-µs ints (NaT → int64 min)."""
+    return ts.to_numpy("datetime64[us]").astype("int64").tolist()
+
+
+def rows_frame(rows: list[tuple], schema: StructType) -> pd.DataFrame:
+    """Output rows → a pandas frame for ``schema``: TimestampType fields
+    arrive as epoch-µs ints (None → NaT), converted column-wise."""
+    df = pd.DataFrame(rows, columns=schema.names)
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            df[f.name] = np.array(
+                [r[i] for r in rows], dtype="datetime64[us]"
+            ).astype("datetime64[ns]")
+    return df
+
 
 def _scan_by_key(
-    prepared: DataFrame,
+    df: DataFrame,
     key_col: str,
-    sort_cols: list[str],
+    ts_col: str,
+    id_col: str,
+    symbol: Column,
     schema: StructType,
-    run,
+    match,
 ) -> DataFrame:
-    """Run a per-key pandas scan over key-sorted partitions via
-    ``mapInPandas`` instead of per-key ``applyInPandas``.
+    """Run the per-key function ``match`` (see ``key_matcher``) over
+    every key's complete (ts, id)-ordered sequence via ``mapInPandas``
+    on key-sorted partitions instead of per-key ``applyInPandas``.
 
     With many short keys (the CEP norm: thousands of users, tens of
     rows each) ``groupBy().applyInPandas`` pays a ~2 ms Arrow
     round-trip AND a tiny output-DataFrame construction PER GROUP —
-    measured as ~85% of several operators' sf0.1 runtime.  This helper
-    keeps the exact same per-key semantics (``run`` receives every row
-    of one key, pre-sorted by ``sort_cols``, exactly as applyInPandas
-    delivered it — but returns a LIST OF TUPLES) while amortizing both
-    costs across a whole partition: one repartition on the key (the
-    same single shuffle), a partition-local sort, a generator that
-    slices contiguous key runs — buffering across Arrow batch
-    boundaries so a key split by the batch size is still scanned
-    whole — and ONE output DataFrame per input Arrow batch instead of
-    one per key."""
-    cols = [f.name for f in schema.fields]
+    measured as ~85% of several operators' sf0.1 runtime.  This runner
+    keeps the same per-key semantics while amortizing both costs across
+    a whole partition: one repartition on the key (the same single
+    shuffle), a partition-local sort, a generator that slices contiguous
+    key runs — buffering across Arrow batch boundaries so a key split by
+    the batch size is still scanned whole — and ONE output DataFrame per
+    input Arrow batch instead of one per key.  The batch scan starts
+    every key at match 0 and has no residue, so ``cut`` is unused."""
+
+    def run(pdf: pd.DataFrame) -> list[tuple]:
+        rows, _, _ = match(
+            int(pdf[key_col].iloc[0]),
+            "".join(pdf["__sym"]),
+            pdf[id_col].tolist(),
+            epoch_us(pdf[ts_col]),
+            0,
+        )
+        return rows
 
     def gen(batches):
-        import numpy as np
-
         cur, buf = None, []
 
         def flush():
             if not buf:
                 return []
-            pdf = (
-                pd.concat(buf, ignore_index=True)
-                if len(buf) > 1
-                else buf[0]
+            return run(
+                pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
             )
-            return run(pdf)
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -107,16 +342,24 @@ def _scan_by_key(
                 rows.extend(flush())
                 cur, buf = k, [seg]
             if rows:
-                yield pd.DataFrame(rows, columns=cols)
+                yield rows_frame(rows, schema)
         rows = flush()
         if rows:
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows_frame(rows, schema)
 
+    prepared = df.select(
+        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    )
     return (
         prepared.repartition(F.col(key_col))
-        .sortWithinPartitions(key_col, *sort_cols)
+        .sortWithinPartitions(key_col, ts_col, id_col)
         .mapInPandas(gen, schema)
     )
+
+
+# ---------------------------------------------------------------------------
+# Batch operators
+# ---------------------------------------------------------------------------
 
 
 def match_recognize_lite(
@@ -131,34 +374,10 @@ def match_recognize_lite(
 
     `symbol` must evaluate to a single-character string per row; `pattern`
     is a regex over those characters (e.g. ``AB+C``). Returns one row per
-    match with the matched span."""
-    compiled = re.compile(pattern)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive (ts, id)-sorted from _scan_by_key's partition sort
-        s = "".join(pdf["__sym"])
-        ids = pdf[id_col].to_numpy()
-        tss = pdf[ts_col].to_numpy()
-        out = []
-        for i, m in enumerate(compiled.finditer(s)):
-            a, b = m.start(), m.end() - 1
-            out.append(
-                (
-                    int(pdf[key_col].iloc[0]),
-                    i + 1,
-                    int(ids[a]),
-                    int(ids[b]),
-                    b - a + 1,
-                    tss[a],
-                    tss[b],
-                )
-            )
-        return out
-
-    prepared = df.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    match with the matched span (AFTER MATCH SKIP PAST LAST ROW)."""
+    return _scan_by_key(
+        df, key_col, ts_col, id_col, symbol, MATCH_SCHEMA, key_matcher(pattern)
     )
-    return _scan_by_key(prepared, key_col, [ts_col, id_col], MATCH_SCHEMA, run)
 
 
 def match_counts(
@@ -224,70 +443,16 @@ def match_recognize_measures(
 
     MEASURES: ``n_rows`` (COUNT(*)) plus one ``n_<s>`` column per entry
     of ``count_syms`` (COUNT(s.*)), FIRST/LAST ts, start/end ids.
-    Default AFTER MATCH SKIP PAST LAST ROW (non-overlapping, leftmost).
-    Same scale shape as match_recognize_lite: one shuffle on the key,
-    linear per-key scan, Arrow transfer."""
-    compiled = re.compile(pattern)
-    fields = [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-    ]
-    fields += [StructField(f"n_{s.lower()}", LongType()) for s in count_syms]
-    fields += [
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-    schema = StructType(fields)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive (ts, id)-sorted from _scan_by_key's partition sort
-        s = "".join(pdf["__sym"])
-        ids = pdf[id_col].to_numpy()
-        tss = pdf[ts_col].to_numpy()
-        key = int(pdf[key_col].iloc[0])
-        out = []
-        for i, m in enumerate(compiled.finditer(s)):
-            a, b = m.start(), m.end() - 1
-            seg = s[a : b + 1]
-            out.append(
-                (
-                    key,
-                    i + 1,
-                    int(ids[a]),
-                    int(ids[b]),
-                    b - a + 1,
-                    *(seg.count(cs) for cs in count_syms),
-                    tss[a],
-                    tss[b],
-                )
-            )
-        return out
-
-    prepared = df.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    Default AFTER MATCH SKIP PAST LAST ROW (non-overlapping, leftmost)."""
+    schema = StructType(
+        _HEAD
+        + [StructField(f"n_{s.lower()}", LongType()) for s in count_syms]
+        + _SPAN_TS
     )
-    return _scan_by_key(prepared, key_col, [ts_col, id_col], schema, run)
-
-
-SKIP_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("b_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-SKIP_SCHEMA_BOTH = StructType(
-    [StructField("skip_mode", StringType())] + list(SKIP_SCHEMA.fields)
-)
+    return _scan_by_key(
+        df, key_col, ts_col, id_col, symbol, schema,
+        key_matcher(pattern, count_syms=tuple(count_syms)),
+    )
 
 
 def match_recognize_skip(
@@ -314,56 +479,31 @@ def match_recognize_skip(
     (LAST(ts)), ``n_rows`` (COUNT(*)), ``b_rows`` (COUNT of the
     ``count_sym``-classified rows inside the match).
 
-    Same scale shape as match_recognize_lite: one shuffle on the key,
-    linear per-key scan.  ``skip="both"`` evaluates BOTH policies in the
-    single per-key pass (the string scan is repeated task-locally; the
-    data is shuffled and Arrow-transferred once) and prefixes each row
-    with a ``skip_mode`` column — for side-by-side policy comparison
-    without a second job."""
-    if skip not in ("past_last_row", "to_next_row", "both"):
-        raise ValueError(f"unknown AFTER MATCH SKIP mode: {skip}")
-    compiled = re.compile(pattern)
-    modes = (
-        ["past_last_row", "to_next_row"] if skip == "both" else [skip]
-    )
-    schema = SKIP_SCHEMA_BOTH if skip == "both" else SKIP_SCHEMA
+    ``skip="both"`` evaluates BOTH policies in the single per-key pass
+    (the string scan is repeated task-locally; the data is shuffled and
+    Arrow-transferred once) and prefixes each row with a ``skip_mode``
+    column — for side-by-side policy comparison without a second job."""
+    if skip != "both":
+        return _scan_by_key(
+            df, key_col, ts_col, id_col, symbol, SKIP_SCHEMA,
+            key_matcher(pattern, skip, count_syms=(count_sym,)),
+        )
+    modes = [
+        (mode, key_matcher(pattern, mode, count_syms=(count_sym,)))
+        for mode in ("past_last_row", "to_next_row")
+    ]
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive (ts, id)-sorted from _scan_by_key's partition sort
-        s = "".join(pdf["__sym"])
-        ids = pdf[id_col].to_numpy()
-        tss = pdf[ts_col].to_numpy()
-        key = int(pdf[key_col].iloc[0])
-        out = []
-        for mode in modes:
-            to_next = mode == "to_next_row"
-            pos = n = 0
-            while True:
-                m = compiled.search(s, pos)
-                if m is None:
-                    break
-                a, b = m.start(), m.end() - 1
-                n += 1
-                seg = s[a : b + 1]
-                row = (
-                    key,
-                    n,
-                    int(ids[a]),
-                    int(ids[b]),
-                    b - a + 1,
-                    seg.count(count_sym),
-                    tss[a],
-                    tss[b],
-                )
-                out.append((mode, *row) if skip == "both" else row)
-                # empty-match guard: always advance at least one position
-                pos = a + 1 if to_next else max(a + 1, m.end())
-        return out
+    def both(key, syms, ids, tss, match_no):
+        rows = [
+            (mode, *row)
+            for mode, fn in modes
+            for row in fn(key, syms, ids, tss, match_no)[0]
+        ]
+        return rows, match_no, 0
 
-    prepared = df.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    return _scan_by_key(
+        df, key_col, ts_col, id_col, symbol, SKIP_SCHEMA_BOTH, both
     )
-    return _scan_by_key(prepared, key_col, [ts_col, id_col], schema, run)
 
 
 def classify(mapping: dict[str, str], other: str = "X") -> Callable[[Column], Column]:
@@ -377,53 +517,6 @@ def classify(mapping: dict[str, str], other: str = "X") -> Callable[[Column], Co
         return expr.otherwise(other)
 
     return apply
-
-
-SKIP_TO_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("s_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-        StructField("s_first_ts", TimestampType()),
-        StructField("s_last_ts", TimestampType()),
-    ]
-)
-
-
-def subset_measures(
-    m: "re.Match", subset_groups: tuple[str, ...]
-) -> tuple[int, int | None, int | None]:
-    """SUBSET union measures from a match's named-group spans:
-    (COUNT(S.*), index of FIRST(S) row, index of LAST(S) row) — shared
-    by the batch operator and the streaming keyed-state twin so the
-    semantics cannot diverge."""
-    spans = [
-        (m.start(g), m.end(g))
-        for g in subset_groups
-        if m.start(g) != -1 and m.end(g) > m.start(g)
-    ]
-    s_rows = sum(e - st for st, e in spans)
-    s_first = min(st for st, _ in spans) if spans else None
-    s_last = max(e for _, e in spans) - 1 if spans else None
-    return s_rows, s_first, s_last
-
-
-def skip_to_resume(m: "re.Match", resume_group: str) -> int:
-    """AFTER MATCH SKIP TO <variable> resume position (inclusive), with
-    Flink's cannot-advance guard: a target at or before the match start
-    (including a variable that did not participate) raises."""
-    resume = m.start(resume_group)
-    if resume <= m.start():
-        raise ValueError(
-            f"AFTER MATCH SKIP TO {resume_group} cannot advance "
-            f"past the match start (Flink raises here too)"
-        )
-    return resume
 
 
 def match_recognize_skip_to(
@@ -451,107 +544,13 @@ def match_recognize_skip_to(
     Flink raises when a skip target cannot advance the scan (SKIP TO
     FIRST A on a match starting at A loops forever); the same guard
     raises here if the resume position is not strictly after the
-    previous match's start.
-
-    Scale shape unchanged from match_recognize_skip: one shuffle on the
-    key, linear per-key scan, keys independent across executors."""
-    compiled = re.compile(pattern)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive (ts, id)-sorted from _scan_by_key's partition sort
-        s = "".join(pdf["__sym"])
-        ids = pdf[id_col].to_numpy()
-        tss = pdf[ts_col].to_numpy()
-        key = int(pdf[key_col].iloc[0])
-        out = []
-        pos = n = 0
-        while True:
-            m = compiled.search(s, pos)
-            if m is None:
-                break
-            a, b = m.start(), m.end() - 1
-            n += 1
-            s_rows, s_first, s_last = subset_measures(m, subset_groups)
-            out.append(
-                (
-                    key,
-                    n,
-                    int(ids[a]),
-                    int(ids[b]),
-                    b - a + 1,
-                    s_rows,
-                    tss[a],
-                    tss[b],
-                    tss[s_first] if s_first is not None else None,
-                    tss[s_last] if s_last is not None else None,
-                )
-            )
-            pos = skip_to_resume(m, resume_group)
-        return out
-
-    prepared = df.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    previous match's start."""
+    return _scan_by_key(
+        df, key_col, ts_col, id_col, symbol, SKIP_TO_SCHEMA,
+        key_matcher(
+            pattern, resume_group=resume_group, subset_groups=subset_groups
+        ),
     )
-    return _scan_by_key(prepared, key_col, [ts_col, id_col], SKIP_TO_SCHEMA, run)
-
-
-# ---------------------------------------------------------------------------
-# Row-pattern exclusions: PATTERN (A {- B -} C)  [ISO SQL:2016 R020]
-# ---------------------------------------------------------------------------
-
-_EXCL_SECTION = re.compile(r"\{-\s*(.*?)\s*-\}")
-
-EXCL_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("excl_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def compile_exclusions(pattern: str) -> tuple["re.Pattern", list[str]]:
-    """Translate row-pattern exclusion syntax ``{- sub -}`` into named
-    groups so the matched-but-excluded spans can be subtracted from the
-    measures.  Returns (compiled regex, exclusion group names).
-
-    Documented limitation: an exclusion nested under an OUTER quantifier
-    keeps only its final iteration's span (regex group semantics); the
-    supported surface is exclusions at pattern top level — every shape
-    the SQL:2016 examples and Flink's MATCH_RECOGNIZE docs show."""
-    names: list[str] = []
-
-    def repl(m: "re.Match") -> str:
-        name = f"xcl{len(names)}"
-        names.append(name)
-        return f"(?P<{name}>{m.group(1)})"
-
-    return re.compile(_EXCL_SECTION.sub(repl, pattern)), names
-
-
-def exclusion_matches(
-    compiled: "re.Pattern", names: list[str], s: str
-) -> list[tuple[int, int, list[int]]]:
-    """Non-overlapping scan (AFTER MATCH SKIP PAST LAST ROW): per match
-    yields (start, end_inclusive, included_positions) with the excluded
-    groups' spans subtracted — shared by the batch operator, the
-    streaming keyed-state twin, and the fuzz tests so the semantics
-    cannot diverge."""
-    out = []
-    for m in compiled.finditer(s):
-        a, b = m.start(), m.end() - 1
-        spans = [m.span(n) for n in names if m.span(n) != (-1, -1)]
-        included = [
-            i for i in range(a, b + 1)
-            if not any(lo <= i < hi for lo, hi in spans)
-        ]
-        out.append((a, b, included))
-    return out
 
 
 def match_recognize_exclusion(
@@ -571,39 +570,11 @@ def match_recognize_exclusion(
     start_id/end_id/first_ts/last_ts/n_rows are computed over the
     INCLUDED rows only; ``excl_rows`` reports how many matched rows the
     exclusion removed.  A match whose rows are ALL excluded emits
-    nothing (it still consumes its span — SKIP PAST LAST ROW).  Same
-    scale shape as every batch CEP operator here: one shuffle on the
-    key, linear per-key scan, Arrow transfer."""
-    compiled, names = compile_exclusions(pattern)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive (ts, id)-sorted from _scan_by_key's partition sort
-        s = "".join(pdf["__sym"])
-        ids = pdf[id_col].to_numpy()
-        tss = pdf[ts_col].to_numpy()
-        key = int(pdf[key_col].iloc[0])
-        out = []
-        for a, b, inc in exclusion_matches(compiled, names, s):
-            if not inc:
-                continue
-            out.append(
-                (
-                    key,
-                    len(out) + 1,
-                    int(ids[inc[0]]),
-                    int(ids[inc[-1]]),
-                    len(inc),
-                    (b - a + 1) - len(inc),
-                    tss[inc[0]],
-                    tss[inc[-1]],
-                )
-            )
-        return out
-
-    prepared = df.select(
-        F.col(key_col), F.col(ts_col), F.col(id_col), symbol.alias("__sym")
+    nothing (it still consumes its span — SKIP PAST LAST ROW)."""
+    return _scan_by_key(
+        df, key_col, ts_col, id_col, symbol, EXCL_SCHEMA,
+        key_matcher(pattern, excl_rows=True),
     )
-    return _scan_by_key(prepared, key_col, [ts_col, id_col], EXCL_SCHEMA, run)
 
 
 # ---------------------------------------------------------------------------
@@ -703,16 +674,14 @@ def match_recognize_iterative(
 
     def scan(batches):
         cur_key, st, nmatch = None, ITER_SEEK, 0
-        cols = [f.name for f in ITER_SCHEMA.fields]
         for pdf in batches:
             out = []
             # .tolist() first: element-wise Series iteration pays a
             # boxing cost per row that dominates long partitions
-            tss = pdf[ts_col].to_numpy("datetime64[us]").astype("int64")
             for k, sym, val, rid, ts in zip(
                 pdf[key_col].tolist(), pdf["__sym"].tolist(),
                 pdf[value_col].tolist(), pdf[id_col].tolist(),
-                tss.tolist(),
+                epoch_us(pdf[ts_col]),
             ):
                 if k != cur_key:
                     cur_key, st, nmatch = k, ITER_SEEK, 0
@@ -720,17 +689,10 @@ def match_recognize_iterative(
                     st, sym, float(val), int(rid), int(ts)
                 )
                 if m is not None:
-                    a_id, e_id, b, a_val, e_val, a_ts, e_ts = m
                     nmatch += 1
-                    out.append(
-                        (
-                            int(cur_key), nmatch, a_id, e_id, b, a_val,
-                            e_val, pd.to_datetime(a_ts, unit="us"),
-                            pd.to_datetime(e_ts, unit="us"),
-                        )
-                    )
+                    out.append((int(cur_key), nmatch, *m))
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield rows_frame(out, ITER_SCHEMA)
 
     prepared = df.select(
         F.col(key_col), F.col(ts_col), F.col(id_col),

@@ -545,7 +545,9 @@ def connected_components_star(
     count + canonical hash, both cheap aggregates); ``localCheckpoint``
     truncates lineage per round as in the propagation variant.  Output:
     (id, component) with component = min id reachable — identical to
-    connected_components, which tests pin."""
+    connected_components, which tests pin.  Raises ``RuntimeError`` if
+    the ``max_iter``-th round still changed the edge set: the labels
+    would be partial."""
     edges = (
         pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(
@@ -597,6 +599,11 @@ def connected_components_star(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge within "
+            f"max_iter={max_iter} rounds; raise max_iter"
+        )
     # fixpoint: every component is a star around its min; a node's label
     # is its minimum neighbor (or itself for the center)
     labels = (

@@ -94,7 +94,6 @@ def s_interval_join_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(
         spark, joined, "s_ijoin_outer_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 
@@ -160,7 +159,6 @@ def s_window_join_outer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(
         spark, joined, "s_wjoin_outer_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 
@@ -230,7 +228,6 @@ def s_window_join_full_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(
         spark, joined, "s_wjoin_full_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 
@@ -299,7 +296,6 @@ def s_three_way_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFr
     return _drain_to_memory(
         spark, out, "s_chain3_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 

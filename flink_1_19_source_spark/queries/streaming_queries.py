@@ -71,22 +71,15 @@ def _events_stream(spark: SparkSession, sf_dir: str, name: str):
 
 def _drain_to_memory(
     spark: SparkSession, sdf: DataFrame, name: str, mode: str, wd: str,
-    partitions: str | None = None,
 ) -> DataFrame:
-    """``partitions`` is passed through to `replay.run_available_now`,
-    which pins the state-store partition count for THIS query (default
-    `replay.STATE_PARTITIONS`).  Pure-JVM stateful plans (stream-stream
-    joins, window aggs) pay partitions x state-store-instances of fixed
-    load/commit/fsync per micro-batch and want FEWER at replay scale (4
-    measured ~20% faster than 8 on the join chains); Python-stateful
-    plans (applyInPandasWithState) want MORE for worker parallelism (8 —
-    the default — measured 2x faster than 2 on the CEP streams)."""
+    """Drain `sdf` into the memory table `name` on a fresh checkpoint
+    (at `replay.STATE_PARTITIONS` state partitions) and return it."""
     import shutil
     import uuid
 
     ckpt = os.path.join(wd, f"ckpt-{uuid.uuid4().hex[:8]}")
     replay.run_available_now(
-        sdf, name, output_mode=mode, checkpoint_dir=ckpt, partitions=partitions
+        sdf, name, output_mode=mode, checkpoint_dir=ckpt
     )
     out = spark.table(name)
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -372,7 +365,6 @@ def s_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(
         spark, joined, "s_ijoin_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 
@@ -409,7 +401,6 @@ def s_window_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(
         spark, joined, "s_wjoin_q",
         sinks.plan_sink("stream_stream_join").output_mode, wd,
-        partitions="4",
     )
 
 

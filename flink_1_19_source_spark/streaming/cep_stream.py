@@ -2,23 +2,36 @@
 (SURVEY §2.9 X5 streaming tier; Flink CEP NFA operator, upstream
 flink-libraries/flink-cep NFA + SQL MatchRecognize exec nodes).
 
-The batch twin (operators/cep.py) scans the complete per-key symbol
-string. Here the same compiled regex/NFA runs *incrementally*: per-key
-state carries the undecided suffix of the symbol sequence (plus aligned
-row ids/timestamps), each micro-batch appends its rows in (ts, id) order,
-emits every newly completed match (AFTER MATCH SKIP PAST LAST ROW), and
-retains only the residue that can still participate in a future match:
+This module is keyed-state plumbing only.  The regex CEP semantics —
+the match loop, every AFTER MATCH SKIP policy, exclusions, SUBSET and
+the other MEASURES — and the output schemas live in operators/cep.py:
+each streaming operator here runs the same ``key_matcher`` per-key
+function as its batch twin, so batch and stream cannot diverge.
 
-- everything up to the end of the last emitted match is dropped (SKIP
-  PAST LAST ROW — matches never overlap);
-- the residue is pruned to its first possible match-start symbol
-  (`start_chars`): a dropped prefix can never begin a new match;
-- a hard `max_buffer` cap bounds state for adversarial keys (Flink CEP
-  bounds the same way via the WITHIN clause); overflow drops oldest rows.
+One keyed-state factory serves the four regex operators.  Per-key state
+carries the undecided suffix of the symbol sequence (plus aligned row
+ids and µs timestamps) and the number of matches emitted so far; each
+micro-batch appends its rows in (ts, id) order, runs the per-key
+function, emits every newly completed match, and keeps one residue:
 
-Because matches are emitted exactly when their last row arrives and the
-replay is event-time-ordered, the union of emitted matches over the run
-equals the batch scan's match set — the convergence oracle.
+- cut at the last match's resume position (0 if there was no match):
+  the scan resumes there, so no earlier row can start a later match —
+  PAST LAST ROW drops through the match end, TO NEXT ROW keeps from one
+  past the match start, SKIP TO keeps from the resumed variable's row;
+- advance to the first possible match-start symbol (``start_chars``):
+  every match begins with one, so a skipped row can never begin one;
+- cap at ``max_buffer`` rows for adversarial keys (Flink CEP bounds the
+  same way via the WITHIN clause); overflow drops the oldest rows.
+
+Emission is prefix-stable when a match found in a prefix of a key's
+sequence is also the match of every longer sequence — true when the
+pattern's last variable is a single unquantified row no earlier
+variable can absorb (``AB+C``, ``CB*C``, ``S[CP]*?P``).  Then matches
+are emitted exactly when their last row arrives and, with the replay
+event-time-ordered, the union of emitted matches over the run equals
+the batch scan's match set at any chunking — the convergence oracle.
+A greedy trailing quantifier moves the match end with every further
+row, so such patterns stay batch-only.
 
 Scale shape: one shuffle on the key; state per key is O(longest pending
 partial match), independent of history length. 1000 executors each own
@@ -27,7 +40,6 @@ their key ranges' NFA state — identical layout to Flink's keyed CEP.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,76 +59,74 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-MATCH_OUTPUT = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-    ]
-)
-
-# undecided suffix: symbol string + aligned ids and µs timestamps
+# undecided suffix: symbol string + aligned ids and µs timestamps, and
+# the number of matches emitted so far (the last match_no)
 MATCH_STATE = StructType(
     [
         StructField("syms", StringType()),
         StructField("ids", ArrayType(LongType())),
         StructField("tss", ArrayType(LongType())),
-        StructField("match_no", LongType()),
+        StructField("n_emitted", LongType()),
     ]
 )
 
 
-def _match_func_factory(pattern: str, start_chars: str, max_buffer: int):
-    compiled = re.compile(pattern)
+def _regex_state_factory(
+    match, schema: StructType, start_chars: str, max_buffer: int
+):
+    """The keyed-state function of every regex operator: run the
+    per-key ``match`` (operators/cep.key_matcher) over the buffered
+    suffix plus this micro-batch's rows, emit its rows as ``schema``,
+    and keep the residue (module docstring)."""
 
-    def match_func(
+    def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            syms, ids, tss, match_no = state.get
-            ids, tss = list(ids), list(tss)
-        else:
-            syms, ids, tss, match_no = "", [], [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "id"], kind="mergesort")
-            syms += "".join(pdf["sym"])
-            ids.extend(int(i) for i in pdf["id"])
-            tss.extend(int(t) for t in pdf["ts"].astype("int64") // 1000)
-
-        out, consumed = [], 0
-        for m in compiled.finditer(syms):
-            a, b = m.start(), m.end() - 1
-            match_no += 1
-            out.append(
-                (
-                    int(key[0]),
-                    match_no,
-                    ids[a],
-                    ids[b],
-                    b - a + 1,
-                    pd.to_datetime(tss[a], unit="us"),
-                    pd.to_datetime(tss[b], unit="us"),
-                )
-            )
-            consumed = m.end()
-
-        # SKIP PAST LAST ROW, then prune to the first possible match start
-        rest = syms[consumed:]
-        first_start = next(
-            (i for i, ch in enumerate(rest) if ch in start_chars), len(rest)
+        syms, ids, tss, match_no = (
+            state.get if state.exists else ("", [], [], 0)
         )
-        cut = consumed + first_start
-        syms, ids, tss = syms[cut:], ids[cut:], tss[cut:]
-        if len(syms) > max_buffer:  # adversarial key: bound the state
-            syms, ids, tss = syms[-max_buffer:], ids[-max_buffer:], tss[-max_buffer:]
-        state.update((syms, ids, tss, match_no))
-        yield pd.DataFrame(out, columns=[f.name for f in MATCH_OUTPUT.fields])
+        pdf = pd.concat(pdfs, ignore_index=True).sort_values(
+            ["ts", "id"], kind="mergesort"
+        )
+        syms += "".join(pdf["sym"])
+        ids = [*ids, *pdf["id"].tolist()]
+        tss = [*tss, *_cep_ops.epoch_us(pdf["ts"])]
+        rows, match_no, cut = match(int(key[0]), syms, ids, tss, match_no)
+        cut = next(
+            (i for i in range(cut, len(syms)) if syms[i] in start_chars),
+            len(syms),
+        )
+        cut = max(cut, len(syms) - max_buffer)
+        state.update((syms[cut:], ids[cut:], tss[cut:], match_no))
+        yield _cep_ops.rows_frame(rows, schema)
 
-    return match_func
+    return fn
+
+
+def _regex_stream(
+    sdf: DataFrame,
+    key_col: str,
+    ts_col: str,
+    id_col: str,
+    symbol: Column,
+    schema: StructType,
+    match,
+    start_chars: str,
+    max_buffer: int,
+) -> DataFrame:
+    prepared = sdf.select(
+        sdf[key_col].alias("key"),
+        sdf[ts_col].alias("ts"),
+        sdf[id_col].alias("id"),
+        symbol.alias("sym"),
+    )
+    return prepared.groupBy("key").applyInPandasWithState(
+        _regex_state_factory(match, schema, start_chars, max_buffer),
+        outputStructType=schema,
+        stateStructType=MATCH_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_match_recognize(
@@ -130,92 +140,12 @@ def streaming_match_recognize(
     max_buffer: int = 4096,
 ) -> DataFrame:
     """Keyed streaming CEP: emits one row per completed `pattern` match,
-    as soon as its closing row arrives (append semantics)."""
-    prepared = sdf.select(
-        sdf[key_col].alias("key"),
-        sdf[ts_col].alias("ts"),
-        sdf[id_col].alias("id"),
-        symbol.alias("sym"),
+    as soon as its closing row arrives (append semantics, AFTER MATCH
+    SKIP PAST LAST ROW); twin of operators/cep.match_recognize_lite."""
+    return _regex_stream(
+        sdf, key_col, ts_col, id_col, symbol, _cep_ops.MATCH_SCHEMA,
+        _cep_ops.key_matcher(pattern), start_chars, max_buffer,
     )
-    return prepared.groupBy("key").applyInPandasWithState(
-        _match_func_factory(pattern, start_chars, max_buffer),
-        outputStructType=MATCH_OUTPUT,
-        stateStructType=MATCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SKIP_OUTPUT = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("b_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def _skip_factory(
-    pattern: str, start_chars: str, max_buffer: int, to_next: bool, count_sym: str
-):
-    compiled = re.compile(pattern)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            syms, ids, tss, match_no = state.get
-            ids, tss = list(ids), list(tss)
-        else:
-            syms, ids, tss, match_no = "", [], [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "id"], kind="mergesort")
-            syms += "".join(pdf["sym"])
-            ids.extend(int(i) for i in pdf["id"])
-            tss.extend(int(t) for t in pdf["ts"].astype("int64") // 1000)
-
-        out = []
-        pos = 0
-        while True:
-            m = compiled.search(syms, pos)
-            if m is None:
-                break
-            a, b = m.start(), m.end() - 1
-            match_no += 1
-            seg = syms[a : b + 1]
-            out.append(
-                (
-                    int(key[0]),
-                    match_no,
-                    ids[a],
-                    ids[b],
-                    b - a + 1,
-                    seg.count(count_sym),
-                    pd.to_datetime(tss[a], unit="us"),
-                    pd.to_datetime(tss[b], unit="us"),
-                )
-            )
-            # TO NEXT ROW resumes inside the match (overlap allowed);
-            # PAST LAST ROW resumes after it (empty-match guarded)
-            pos = a + 1 if to_next else max(a + 1, m.end())
-
-        # everything before the resume position can never participate in a
-        # future match; then prune to the first possible match-start symbol
-        rest = syms[pos:]
-        first_start = next(
-            (i for i, ch in enumerate(rest) if ch in start_chars), len(rest)
-        )
-        cut = pos + first_start
-        syms, ids, tss = syms[cut:], ids[cut:], tss[cut:]
-        if len(syms) > max_buffer:
-            syms, ids, tss = syms[-max_buffer:], ids[-max_buffer:], tss[-max_buffer:]
-        state.update((syms, ids, tss, match_no))
-        yield pd.DataFrame(out, columns=[f.name for f in SKIP_OUTPUT.fields])
-
-    return fn
 
 
 def streaming_match_skip(
@@ -235,22 +165,58 @@ def streaming_match_skip(
     measures) as its closing row arrives.  ``to_next_row`` keeps the
     buffer from one past the last match START (overlapping matches may
     still complete); ``past_last_row`` drops through the match end."""
-    if skip not in ("past_last_row", "to_next_row"):
-        raise ValueError(f"unknown AFTER MATCH SKIP mode: {skip}")
-    prepared = sdf.select(
-        sdf[key_col].alias("key"),
-        sdf[ts_col].alias("ts"),
-        sdf[id_col].alias("id"),
-        symbol.alias("sym"),
+    return _regex_stream(
+        sdf, key_col, ts_col, id_col, symbol, _cep_ops.SKIP_SCHEMA,
+        _cep_ops.key_matcher(pattern, skip, count_syms=(count_sym,)),
+        start_chars, max_buffer,
     )
-    return prepared.groupBy("key").applyInPandasWithState(
-        _skip_factory(
-            pattern, start_chars, max_buffer, skip == "to_next_row", count_sym
+
+
+def streaming_match_skip_to(
+    sdf: DataFrame,
+    key_col: str,
+    ts_col: str,
+    id_col: str,
+    symbol: Column,
+    pattern: str,
+    start_chars: str,
+    resume_group: str,
+    subset_groups: tuple[str, ...],
+    max_buffer: int = 4096,
+) -> DataFrame:
+    """Streaming twin of operators/cep.match_recognize_skip_to: AFTER
+    MATCH SKIP TO <variable> (resume AT the resumed variable's row —
+    chained matches share their boundary row) with SUBSET union
+    measures, on keyed state.  The buffer keeps from the resume
+    position; a partial match's suffix survives across micro-batches
+    and completes when its closing row arrives."""
+    return _regex_stream(
+        sdf, key_col, ts_col, id_col, symbol, _cep_ops.SKIP_TO_SCHEMA,
+        _cep_ops.key_matcher(
+            pattern, resume_group=resume_group, subset_groups=subset_groups
         ),
-        outputStructType=SKIP_OUTPUT,
-        stateStructType=MATCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        start_chars, max_buffer,
+    )
+
+
+def streaming_match_exclusion(
+    sdf: DataFrame,
+    key_col: str,
+    ts_col: str,
+    id_col: str,
+    symbol: Column,
+    pattern: str,
+    start_chars: str,
+    max_buffer: int = 4096,
+) -> DataFrame:
+    """Keyed streaming MATCH_RECOGNIZE with row-pattern exclusions: the
+    ``{- sub -}`` rows advance the incremental NFA but are dropped from
+    the emitted measures; twin of
+    operators/cep.match_recognize_exclusion."""
+    return _regex_stream(
+        sdf, key_col, ts_col, id_col, symbol, _cep_ops.EXCL_SCHEMA,
+        _cep_ops.key_matcher(pattern, excl_rows=True),
+        start_chars, max_buffer,
     )
 
 
@@ -347,220 +313,6 @@ def pattern_within_stream(
 
 
 # ---------------------------------------------------------------------------
-# AFTER MATCH SKIP TO <variable> + SUBSET measures on keyed state
-# ---------------------------------------------------------------------------
-SKIP_TO_OUTPUT = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("s_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-        StructField("s_first_ts", TimestampType()),
-        StructField("s_last_ts", TimestampType()),
-    ]
-)
-
-
-def _skip_to_factory(
-    pattern: str,
-    start_chars: str,
-    max_buffer: int,
-    resume_group: str,
-    subset_groups: tuple[str, ...],
-):
-    compiled = re.compile(pattern)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            syms, ids, tss, match_no = state.get
-            ids, tss = list(ids), list(tss)
-        else:
-            syms, ids, tss, match_no = "", [], [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "id"], kind="mergesort")
-            syms += "".join(pdf["sym"])
-            ids.extend(int(i) for i in pdf["id"])
-            tss.extend(int(t) for t in pdf["ts"].astype("int64") // 1000)
-
-        out = []
-        pos = 0
-        while True:
-            m = compiled.search(syms, pos)
-            if m is None:
-                break
-            a, b = m.start(), m.end() - 1
-            match_no += 1
-            s_rows, s_first, s_last = _cep_ops.subset_measures(
-                m, subset_groups
-            )
-            out.append(
-                (
-                    int(key[0]),
-                    match_no,
-                    ids[a],
-                    ids[b],
-                    b - a + 1,
-                    s_rows,
-                    pd.to_datetime(tss[a], unit="us"),
-                    pd.to_datetime(tss[b], unit="us"),
-                    pd.to_datetime(tss[s_first], unit="us")
-                    if s_first is not None else pd.NaT,
-                    pd.to_datetime(tss[s_last], unit="us")
-                    if s_last is not None else pd.NaT,
-                )
-            )
-            pos = _cep_ops.skip_to_resume(m, resume_group)
-
-        # the resume row itself may start the NEXT match (SKIP TO LAST
-        # semantics) — keep from pos, then prune to a possible start
-        rest = syms[pos:]
-        first_start = next(
-            (i for i, ch in enumerate(rest) if ch in start_chars), len(rest)
-        )
-        cut = pos + first_start
-        syms, ids, tss = syms[cut:], ids[cut:], tss[cut:]
-        if len(syms) > max_buffer:
-            syms, ids, tss = syms[-max_buffer:], ids[-max_buffer:], tss[-max_buffer:]
-        state.update((syms, ids, tss, match_no))
-        yield pd.DataFrame(out, columns=[f.name for f in SKIP_TO_OUTPUT.fields])
-
-    return fn
-
-
-def streaming_match_skip_to(
-    sdf: DataFrame,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    symbol: Column,
-    pattern: str,
-    start_chars: str,
-    resume_group: str,
-    subset_groups: tuple[str, ...],
-    max_buffer: int = 4096,
-) -> DataFrame:
-    """Streaming twin of operators/cep.match_recognize_skip_to: AFTER
-    MATCH SKIP TO <variable> (resume AT the resumed variable's row —
-    chained matches share their boundary row) with SUBSET union
-    measures, on keyed state.  The buffer keeps from the resume
-    position; a partial match's suffix survives across micro-batches
-    and completes when its closing row arrives."""
-    prepared = sdf.select(
-        sdf[key_col].alias("key"),
-        sdf[ts_col].alias("ts"),
-        sdf[id_col].alias("id"),
-        symbol.alias("sym"),
-    )
-    return prepared.groupBy("key").applyInPandasWithState(
-        _skip_to_factory(
-            pattern, start_chars, max_buffer, resume_group, subset_groups
-        ),
-        outputStructType=SKIP_TO_OUTPUT,
-        stateStructType=MATCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-EXCL_OUTPUT = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("excl_rows", LongType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def _excl_factory(pattern: str, start_chars: str, max_buffer: int):
-    compiled, names = _cep_ops.compile_exclusions(pattern)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            syms, ids, tss, match_no = state.get
-            ids, tss = list(ids), list(tss)
-        else:
-            syms, ids, tss, match_no = "", [], [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "id"], kind="mergesort")
-            syms += "".join(pdf["sym"])
-            ids.extend(int(i) for i in pdf["id"])
-            tss.extend(int(t) for t in pdf["ts"].astype("int64") // 1000)
-
-        out, consumed = [], 0
-        for a, b, inc in _cep_ops.exclusion_matches(compiled, names, syms):
-            consumed = b + 1
-            if not inc:
-                continue  # fully-excluded match: consumes, emits nothing
-            match_no += 1
-            out.append(
-                (
-                    int(key[0]),
-                    match_no,
-                    ids[inc[0]],
-                    ids[inc[-1]],
-                    len(inc),
-                    (b - a + 1) - len(inc),
-                    pd.to_datetime(tss[inc[0]], unit="us"),
-                    pd.to_datetime(tss[inc[-1]], unit="us"),
-                )
-            )
-
-        rest = syms[consumed:]
-        first_start = next(
-            (i for i, ch in enumerate(rest) if ch in start_chars), len(rest)
-        )
-        cut = consumed + first_start
-        syms, ids, tss = syms[cut:], ids[cut:], tss[cut:]
-        if len(syms) > max_buffer:
-            syms, ids, tss = (
-                syms[-max_buffer:], ids[-max_buffer:], tss[-max_buffer:]
-            )
-        state.update((syms, ids, tss, match_no))
-        yield pd.DataFrame(out, columns=[f.name for f in EXCL_OUTPUT.fields])
-
-    return fn
-
-
-def streaming_match_exclusion(
-    sdf: DataFrame,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    symbol: Column,
-    pattern: str,
-    start_chars: str,
-    max_buffer: int = 4096,
-) -> DataFrame:
-    """Keyed streaming MATCH_RECOGNIZE with row-pattern exclusions: the
-    ``{- sub -}`` rows advance the incremental NFA but are dropped from
-    the emitted measures (the exact engine batch twin
-    operators/cep.match_recognize_exclusion shares via
-    ``exclusion_matches``)."""
-    prepared = sdf.select(
-        sdf[key_col].alias("key"),
-        sdf[ts_col].alias("ts"),
-        sdf[id_col].alias("id"),
-        symbol.alias("sym"),
-    )
-    return prepared.groupBy("key").applyInPandasWithState(
-        _excl_factory(pattern, start_chars, max_buffer),
-        outputStructType=EXCL_OUTPUT,
-        stateStructType=MATCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Iterative conditions on a keyed stream (Flink CEP IterativeCondition):
 # the batch twin is operators/cep.match_recognize_iterative; BOTH run the
 # same iterative_step automaton, so batch and stream cannot diverge.  The
@@ -570,20 +322,6 @@ def streaming_match_exclusion(
 # Flink evaluates IterativeConditions eagerly inside the NFA.
 # ---------------------------------------------------------------------------
 
-ITER_OUTPUT = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("match_no", LongType()),
-        StructField("start_id", LongType()),
-        StructField("end_id", LongType()),
-        StructField("b_rows", LongType()),
-        StructField("anchor_value", DoubleType()),
-        StructField("end_value", DoubleType()),
-        StructField("start_ts", TimestampType()),
-        StructField("end_ts", TimestampType()),
-    ]
-)
-
 ITER_STATE = StructType(
     [
         StructField("phase", LongType()),
@@ -591,41 +329,33 @@ ITER_STATE = StructType(
         StructField("a_id", LongType()),
         StructField("a_ts", LongType()),
         StructField("b_cnt", LongType()),
-        StructField("match_no", LongType()),
+        StructField("n_emitted", LongType()),
     ]
 )
 
 
 def _iter_factory():
-    from ..operators.cep import ITER_SEEK, iterative_step
-
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if state.exists:
             phase, a_val, a_id, a_ts, b_cnt, match_no = state.get
             st = (int(phase), float(a_val), int(a_id), int(a_ts), int(b_cnt))
         else:
-            st, match_no = ITER_SEEK, 0
+            st, match_no = _cep_ops.ITER_SEEK, 0
         out = []
         for pdf in pdfs:
             pdf = pdf.sort_values(["ts", "id"], kind="mergesort")
-            tss = pdf["ts"].astype("int64").to_numpy() // 1000
             for sym, val, rid, ts in zip(
                 pdf["sym"].tolist(), pdf["val"].tolist(),
-                pdf["id"].tolist(), tss.tolist(),
+                pdf["id"].tolist(), _cep_ops.epoch_us(pdf["ts"]),
             ):
-                st, m = iterative_step(st, sym, float(val), int(rid), int(ts))
+                st, m = _cep_ops.iterative_step(
+                    st, sym, float(val), int(rid), int(ts)
+                )
                 if m is not None:
-                    a, e, b, av, ev, ats, ets = m
                     match_no += 1
-                    out.append(
-                        (
-                            int(key[0]), match_no, a, e, b, av, ev,
-                            pd.to_datetime(ats, unit="us"),
-                            pd.to_datetime(ets, unit="us"),
-                        )
-                    )
+                    out.append((int(key[0]), match_no, *m))
         state.update((st[0], st[1], st[2], st[3], st[4], match_no))
-        yield pd.DataFrame(out, columns=[f.name for f in ITER_OUTPUT.fields])
+        yield _cep_ops.rows_frame(out, _cep_ops.ITER_SCHEMA)
 
     return fn
 
@@ -651,7 +381,7 @@ def streaming_match_iterative(
     )
     return prepared.groupBy("key").applyInPandasWithState(
         _iter_factory(),
-        outputStructType=ITER_OUTPUT,
+        outputStructType=_cep_ops.ITER_SCHEMA,
         stateStructType=ITER_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -83,3 +83,12 @@ def test_state_partition_pin_has_one_home():
         if key in line
     ]
     assert not hits, f"{key} named under queries/:\n" + "\n".join(hits)
+
+
+def test_regex_cep_semantics_have_one_home():
+    """The regex match loop and the CEP output schemas live in
+    `operators/cep.py`; the streaming module only carries keyed state."""
+    text = (REPO / "flink_1_19_source_spark" / "streaming" / "cep_stream.py").read_text()
+    banned = ["re.compile(", ".finditer(", ".search(", 'StructField("match_no"']
+    hits = [b for b in banned if b in text]
+    assert not hits, f"streaming/cep_stream.py re-implements CEP: {hits}"
